@@ -269,7 +269,6 @@ def nn_descent(
     exclude_pairs: DataFrame | None = None,
     mode: str = "auto",
     payload: str = "fp32",
-    rev_push_gate: bool = False,
     min_recall: float | None = None,
     control: DataFrame | None = None,
     n_control: int = 200,
@@ -307,40 +306,24 @@ def nn_descent(
     "fused" asserts the broadcast fits; "join" forces the legacy
     join-based loop below (kept as the cross-checked slow path).
 
-    ``payload="fp16"`` (blocked loop only) ships gathered vectors as
-    float16 — halves the dominant matrix shuffle edges for ~2^-11
-    distance rounding. Forces the blocked path so the knob is never
-    silently ignored.
-
-    ``payload="int8"`` (blocked loop only) ships per-vector-scaled int8
-    codes — ~4x fewer bytes on the same edges (~0.4%-of-max rounding
-    during the descent) — and finishes with an EXACT fp32 re-rank of
-    each pool's top min(L, 2k) band, so the returned graph's distances
-    and ordering are exact fp32 arithmetic (the quantized-retrieve /
-    exact-rerank contract). Like fp16 this is a network lever for
-    byte-bound clusters: local wall is shuffle-page-cache-bound and
-    measured payload-insensitive (BENCH.md fp16 A/B).
-
-    ``rev_push_gate`` (fused/blocked loops; default OFF) applies the
-    reference's reverse-push gate — a reverse sample reaches the
-    receiver's candidate lists only when its distance exceeds the
-    receiver's round-start pool worst (src/index_graph.cpp:90-103) —
-    shrinking pairgen volume as pools converge. Measured (BENCH.md
-    reverse-push-gate A/B): in this dataflow the gate's sentinel rows
-    cost wall in early rounds and the pruned reverse samples delay
-    convergence by ~1-3 rounds at equal recall, so end-to-end it is
-    wall-neutral at 500k and ~1.5x slower at 50k on this host — the
-    candidate-byte cut is a network lever for real clusters, like
-    payload="fp16". Default off; flip on for strict reference parity
-    or network-bound deployments. The join loop keeps ungated
-    reference-paper semantics.
+    ``payload`` is "fp32" (exact) or "int8" (blocked loop only; forces
+    it so the knob is never silently ignored). int8 ships
+    per-vector-scaled int8 codes — ~4x fewer bytes on the dominant
+    matrix shuffle edges (~0.4%-of-max rounding during the descent) —
+    and finishes with an EXACT fp32 re-rank of each pool's top
+    min(L, 2k) band, so the returned graph's distances and ordering
+    are exact fp32 arithmetic (the quantized-retrieve / exact-rerank
+    contract). It is a network lever for byte-bound clusters: local
+    wall is shuffle-page-cache-bound and measured payload-insensitive
+    (BENCH.md wire-payload A/Bs).
 
     ``min_recall`` enables the reference's OWN convergence criterion
     (src/index_graph.cpp:172-179): each round, the sampled recall of
     the pool vs exact control truth is evaluated, and the loop stops
     once it reaches the threshold (the reference uses 0.99) — so
     like-for-like runs can terminate exactly like the reference
-    instead of on a fixed round count. ``control`` supplies the
+    instead of on a fixed round count; the round that stops on it
+    carries ``recall_stop=True``. ``control`` supplies the
     precomputed truth (src, dst) — compute it with
     :func:`control_truth` BEFORE any build timer, as the reference
     loads its ground-truth file outside the timed build; left None,
@@ -348,7 +331,8 @@ def nn_descent(
     Per-round metrics gain ``recall`` and ``recall_eval_sec`` rows
     (eval time kept separate, like the reference's per-iter walls).
     The update-rate stop remains active; pass ``min_update_rate=0``
-    for pure reference semantics.
+    for pure reference semantics. An empty control set raises
+    ValueError rather than silently running to ``max_iters``.
 
     ``block_bytes`` (blocked loop only; default
     nnd_blocked.EMB_BLOCK_BYTES) sets the embedding-block size — the
@@ -356,8 +340,9 @@ def nn_descent(
     here: per-round gather bytes ~ (corpus_bytes / block_bytes) x
     corpus, so larger blocks cut single-box scratch-disk quadratically
     at higher per-task working memory (BENCH.md high-dim section).
+    Passing it to a run that takes the fused or join loop warns.
     """
-    if payload not in ("fp32", "fp16", "int8"):
+    if payload not in ("fp32", "int8"):
         raise ValueError(f"unknown payload {payload!r}")
     if payload != "fp32":
         if mode in ("fused", "join"):
@@ -377,10 +362,12 @@ def nn_descent(
         )
         control_pdf = truth.select("src", "dst").toPandas()
         control_total = len(control_pdf)
-        if control_total:
-            control_df = spark.createDataFrame(
-                control_pdf, "src long, dst long"
+        if not control_total:
+            emb.unpersist()
+            raise ValueError(
+                "min_recall is set but the control set is empty"
             )
+        control_df = spark.createDataFrame(control_pdf, "src long, dst long")
     n_edges_target = None
     bc = None
     if mode == "fused":
@@ -394,6 +381,15 @@ def nn_descent(
         )
     if mode == "fused" and bc is None:
         raise ValueError("mode='fused' but corpus exceeds broadcast cap")
+    if block_bytes is not None and (bc is not None or mode == "join"):
+        import warnings
+
+        warnings.warn(
+            "block_bytes only sizes the blocked loop's embedding blocks; "
+            f"this run takes the {'fused' if bc is not None else 'join'} "
+            "loop and ignores it",
+            stacklevel=2,
+        )
     if bc is not None or mode in ("blocked", "auto"):
         from kgraph_framework_spark.operators.nnd_fused import (
             nn_descent_fused,
@@ -407,7 +403,7 @@ def nn_descent(
             pool, metrics = nn_descent_fused(
                 spark, emb, bc, k=k, l=l, s=s, max_iters=max_iters,
                 min_update_rate=min_update_rate, seed=seed, init=init,
-                exclude_pairs=exclude_pairs, rev_push_gate=rev_push_gate,
+                exclude_pairs=exclude_pairs,
                 min_recall=min_recall, control_df=control_df,
                 control_total=control_total,
             )
@@ -419,7 +415,7 @@ def nn_descent(
             )
 
             control_bc = None
-            if control_pdf is not None and len(control_pdf):
+            if control_pdf is not None:
                 from kgraph_framework_spark.operators.nnd_fused import _pack2
 
                 s_arr = control_pdf["src"].to_numpy(np.int64)
@@ -437,7 +433,6 @@ def nn_descent(
                 spark, emb, k=k, l=l, s=s, max_iters=max_iters,
                 min_update_rate=min_update_rate, seed=seed, init=init,
                 exclude_pairs=exclude_pairs, final_k=k, payload=payload,
-                rev_push_gate=rev_push_gate,
                 min_recall=min_recall, control_bc=control_bc,
                 control_total=control_total, **bb,
             )
@@ -583,6 +578,7 @@ def nn_descent(
             row_m["recall"] = round(rec, 4)
             row_m["recall_eval_sec"] = round(time.monotonic() - t_ev, 2)
             recall_stop = rec >= min_recall
+        row_m["recall_stop"] = recall_stop
         metrics.append(row_m)
         if recall_stop or rate < min_update_rate:
             break
@@ -616,11 +612,20 @@ def control_truth(
     compute this BEFORE the timer (as the reference does) and pass it
     via ``nn_descent(control=...)``.
 
-    Deterministic: control ids are every (n // n_control)-th vec_id.
+    Deterministic: control ids are every (n // n_control)-th vec_id in
+    ascending id order. On a non-contiguous id space (offset or gapped
+    ids) the stride runs over id ranks (:func:`id_index`), so the
+    control set is drawn from real ids whatever their spacing.
     """
-    n, _ = id_stats(emb)
+    n, contiguous = id_stats(emb)
     stride = max(1, n // n_control)
-    qdf = emb.where(F.col("vec_id") % stride == 0).toPandas()
+    if contiguous:
+        picked = emb.where(F.col("vec_id") % stride == 0)
+    else:
+        picked = emb.join(
+            id_index(emb).where(F.col("ridx") % stride == 0), "vec_id"
+        )
+    qdf = picked.select("vec_id", "embedding").toPandas()
     qids = qdf["vec_id"].to_numpy(np.int64)
     q = np.stack(qdf["embedding"].to_numpy()).astype(np.float64)
     bq = spark.sparkContext.broadcast((qids, q))

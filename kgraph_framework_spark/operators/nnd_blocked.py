@@ -70,12 +70,11 @@ round for round (asserted in tests/test_nnd_blocked.py).
 
 Wire payloads (network levers for byte-bound clusters; local wall is
 page-cache-bound and measured payload-insensitive, BENCH.md): the
-packed matrix buffers ship as fp32 (default, bit-exact), fp16
-(2x fewer bytes, ~2^-11 rounding), or int8 + per-vector scales
-(~4x fewer bytes, ~0.4%-of-max rounding, finished by an exact fp32
-re-rank of the top band so the RETURNED graph is exact). The wire
-format is length-inferred per buffer (_wire_split) — no schema change,
-and the gather packs re-ship slices at the stored width.
+packed matrix buffers ship as fp32 (default, bit-exact) or int8 +
+per-vector scales (~4x fewer bytes, ~0.4%-of-max rounding, finished by
+an exact fp32 re-rank of the top band so the RETURNED graph is exact).
+The wire format is length-inferred per buffer (_wire_split) — no
+schema change, and the gather packs re-ship slices at the stored width.
 """
 
 from __future__ import annotations
@@ -88,18 +87,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgraph_framework_spark.operators.nnd_fused import (
-    TAU_NBR,
     _blk_np,
     _canonical_pairs,
     _empty,
     _merge_np,
     _order_target_dist,
     _pack2,
-    _pool_tau_np,
     _ranks,
     _sample_np,
-    _split_tau_and_gate,
-    _tau_lookup,
     _unpack2,
     auto_n_blocks,
     blk_col,
@@ -158,10 +153,7 @@ TAU_ENGAGE_RATE = 0.5
 POOL_P_SCHEMA = (
     "blk int, src binary, dst binary, dist binary, is_new binary"
 )
-SAMPLE_P_SCHEMA = (
-    "blk int, key binary, nbr binary, is_new binary, fwd binary, "
-    "dist binary"
-)
+SAMPLE_P_SCHEMA = "blk int, key binary, nbr binary, is_new binary, fwd binary"
 PAIR_P_SCHEMA = "g int, pk binary"
 #: gather-1 input: pair-key rows (pk set) unioned with per-vertex tau
 #: threshold rows (t_ids/t_tau set) — see _tau_packed_map
@@ -179,7 +171,7 @@ MERGE_P_SCHEMA = POOL_P_SCHEMA + ", n_entries long, n_fresh long"
 _POOL_P_COLS = {"blk": "int32", "src": "object", "dst": "object",
                 "dist": "object", "is_new": "object"}
 _SAMPLE_P_COLS = {"blk": "int32", "key": "object", "nbr": "object",
-                  "is_new": "object", "fwd": "object", "dist": "object"}
+                  "is_new": "object", "fwd": "object"}
 _PAIR_P_COLS = {"g": "int32", "pk": "object"}
 _PACK_P_COLS = {"g2": "int32", "pk": "object", "u_ids": "object",
                 "u_mat": "object", "dim": "int32", "u_tau": "object",
@@ -239,27 +231,23 @@ def _emb_concat(emb_pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, int]:
 
 def _wire_split(buf, n_rows: int, dim: int):
     """Split a packed matrix buffer into its wire parts WITHOUT decoding:
-    (kind, arr, scales) where kind is "f32"/"f16" (arr = float matrix,
+    (kind, arr, scales) where kind is "f32" (arr = float32 matrix,
     scales None) or "q8" (arr = int8 code matrix, scales = per-row
     float32 dequant factors appended after the codes). The layout is
-    inferred from the byte length — n*dim*4, n*dim*2, or n*(dim+4) —
-    which is unambiguous for dim > 4 (build_emb_blocks rejects int8 at
-    dim <= 4), so narrow payloads need no schema change."""
+    inferred from the byte length — n*dim*4 or n*(dim+4), which differ
+    at every integer dim — so the int8 payload needs no schema change."""
     if n_rows == 0:
         return "f32", np.empty((0, dim), np.float32), None
-    per_row = len(buf) // n_rows
-    if per_row == dim + 4 and per_row != dim * 2:
+    if len(buf) // n_rows == dim + 4:
         codes = np.frombuffer(buf, np.int8, n_rows * dim).reshape(-1, dim)
         scales = np.frombuffer(buf, np.float32, n_rows, n_rows * dim)
         return "q8", codes, scales
-    dt = np.float16 if per_row == dim * 2 else np.float32
-    return ("f16" if dt is np.float16 else "f32",
-            np.frombuffer(buf, dt).reshape(-1, dim), None)
+    return "f32", np.frombuffer(buf, np.float32).reshape(-1, dim), None
 
 
 def _wire_dequant(kind: str, arr: np.ndarray, scales) -> np.ndarray:
     """Materialize the float matrix for a wire triple (identity for
-    float payloads; codes * per-row scale for q8). One allocation, not
+    f32; codes * per-row scale for q8). One allocation, not
     two: the astype buffer is scaled in place — fresh big buffers are
     the expensive resource on page-fault-bound hosts (see l2_gathered)."""
     if kind != "q8":
@@ -270,10 +258,10 @@ def _wire_dequant(kind: str, arr: np.ndarray, scales) -> np.ndarray:
 
 
 def _mat_decode(buf, n_rows: int, dim: int) -> np.ndarray:
-    """Decode a packed matrix buffer to a float matrix. The wire format
-    (float32, float16 under ``payload="fp16"``, or int8+scales under
-    ``payload="int8"``) is inferred from the byte length (_wire_split),
-    so mixed-payload blocks can coexist in one plan — ACROSS blocks;
+    """Decode a packed matrix buffer to a float32 matrix. The wire
+    format (float32, or int8+scales under ``payload="int8"``) is
+    inferred from the byte length (_wire_split), so mixed-payload
+    blocks can coexist in one plan — ACROSS blocks;
     within one logical block every chunk carries the block's single
     payload kind (build_emb_blocks packs uniformly; _emb_concat_wire
     asserts it)."""
@@ -285,7 +273,7 @@ def _emb_concat_wire(emb_pdf: pd.DataFrame):
     block keeping its stored payload (no dequantization), so gather-1
     can re-ship slices at wire width. Returns (ids, kind, arr, scales,
     dim, wire_row_bytes): arr rows parallel ids; scales is None for
-    float payloads."""
+    f32."""
     dim = int(emb_pdf["dim"].iloc[0])
     if len(emb_pdf) > 1:
         emb_pdf = emb_pdf.sort_values("c")
@@ -294,8 +282,8 @@ def _emb_concat_wire(emb_pdf: pd.DataFrame):
              for a, b in zip(id_bufs, emb_pdf["mat"])]
     kind = parts[0][0]
     # chunks of one logical block must share a payload kind: a silent
-    # f16+f32 np.concatenate would upcast and ship bytes inconsistent
-    # with the declared kind (len(parts) is small, the check is free)
+    # q8+f32 np.concatenate would cast and ship bytes inconsistent with
+    # the declared kind (len(parts) is small, the check is free)
     assert all(p[0] == kind for p in parts), (
         "mixed payload kinds within one logical block: "
         f"{sorted({p[0] for p in parts})}"
@@ -309,14 +297,14 @@ def _emb_concat_wire(emb_pdf: pd.DataFrame):
         scales = scls[0] if len(scls) == 1 else np.concatenate(scls)
         wire_row = dim + 4
     else:
-        wire_row = dim * arr.itemsize
+        wire_row = dim * 4
     return ids, kind, arr, scales, dim, wire_row
 
 
 def _wire_pack_rows(kind: str, arr: np.ndarray, scales, rows) -> bytes:
     """Serialize the selected rows of a wire matrix in the same
     length-inferable layout _wire_split reads (codes then scales for
-    q8; raw float bytes otherwise)."""
+    q8; raw float32 bytes otherwise)."""
     sl = np.ascontiguousarray(arr[rows])
     if kind != "q8":
         return sl.tobytes()
@@ -337,21 +325,14 @@ def build_emb_blocks(
     distributed analog of the reference's in-RAM `data_` matrix
     (include/index/index.h:57-60) — sharded, not replicated.
 
-    ``payload="fp16"`` halves every downstream matrix byte-edge (the
-    block shuffle, the r-fold replicated hi cells, the gathered u_mat
-    packs) by storing the fp32 vectors rounded to float16. Distances
-    become approximate (relative error ~2^-11 per component) — the
-    movement-bound scale lever; default stays exact fp32.
-
-    ``payload="int8"`` cuts the same edges ~4x: each vector is stored
-    as int8 codes with a per-vector float32 dequant scale (max|x|/127,
-    symmetric — the classic per-row affine-free quantization), decoded
-    only at the scoring sites. ~0.4%-of-max per-component rounding; the
-    descent loop pairs it with an exact fp32 re-rank of the final top-k
-    band (nn_descent_blocked) so the RETURNED graph distances are exact.
-    Requires dim > 4 (below that the length-inferred wire layout would
-    collide with fp16)."""
-    dt = np.float16 if payload == "fp16" else np.float32
+    ``payload="int8"`` cuts every downstream matrix byte-edge (the block
+    shuffle, the r-fold replicated hi cells, the gathered u_mat packs)
+    ~4x: each vector is stored as int8 codes with a per-vector float32
+    dequant scale (max|x|/127, symmetric — the classic per-row
+    affine-free quantization), decoded only at the scoring sites.
+    ~0.4%-of-max per-component rounding; the descent loop pairs it with
+    an exact fp32 re-rank of the final top-k band (nn_descent_blocked)
+    so the RETURNED graph distances are exact."""
     q8 = payload == "int8"
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -360,21 +341,17 @@ def build_emb_blocks(
                            "mat": "object", "dim": "int32"})
         ids = pdf["vec_id"].to_numpy(np.int64)
         X = np.stack(pdf["embedding"].to_numpy()).astype(np.float32)
-        if dt is not np.float32:
-            X = X.astype(dt)
         o = np.argsort(ids, kind="stable")
         ids, X = ids[o], np.ascontiguousarray(X[o])
         g = int(pdf["g"].iloc[0])
         dim = int(X.shape[1])
         scales = None
         if q8:
-            if dim <= 4:
-                raise ValueError("payload='int8' requires dim > 4")
             scales = (np.maximum(np.abs(X).max(axis=1), 1e-30) / 127.0
                       ).astype(np.float32)
             X = np.clip(np.rint(X / scales[:, None]), -127, 127
                         ).astype(np.int8)
-        per_row = dim + 4 if q8 else dim * X.itemsize
+        per_row = dim + 4 if q8 else dim * 4
         m = max(1, row_bytes // per_row)
         rows = {"g": [], "c": [], "ids": [], "mat": [], "dim": []}
         for c, a in enumerate(range(0, ids.size, m)):
@@ -569,6 +546,39 @@ def packed_pool_recall(pool_p: DataFrame, control_bc, control_total: int) -> flo
     return int(row[0] or 0) / max(control_total, 1)
 
 
+def _tau_lookup(t_ids: np.ndarray, t_tau: np.ndarray,
+                q: np.ndarray) -> np.ndarray:
+    """tau for each queried vertex id; +inf where the id has no finite
+    threshold (unsaturated pool), so the insertion filter keeps every
+    candidate for it (dist <= tau)."""
+    if t_ids.size == 0:
+        return np.full(q.size, np.inf)
+    idx = np.searchsorted(t_ids, q)
+    ok = idx < t_ids.size
+    idx0 = np.where(ok, idx, 0)
+    hit = ok & (t_ids[idx0] == q)
+    return np.where(hit, t_tau[idx0], np.inf)
+
+
+def _pool_tau_np(src: np.ndarray, dist: np.ndarray,
+                 l: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per-vertex pool-worst thresholds: (sorted ids, max dist) for the
+    SATURATED vertices only (pool holds >= l entries). Unsaturated
+    vertices are omitted — their conceptual worst is +inf (any insert
+    accepted), which _tau_lookup reports as "no threshold"."""
+    if src.size == 0:
+        z = np.empty(0, np.int64)
+        return z, np.empty(0, np.float64)
+    o = np.argsort(src, kind="stable")
+    s_s, d_s = src[o], dist[o]
+    starts = np.flatnonzero(np.r_[True, s_s[1:] != s_s[:-1]])
+    ids = s_s[starts]
+    cnt = np.diff(np.append(starts, s_s.size))
+    tau = np.maximum.reduceat(d_s, starts)
+    m = cnt >= l
+    return ids[m], tau[m]
+
+
 def _tau_packed_map(l: int, out_blocks: int, r: int = 1):
     """Per-vertex round-start insertion thresholds — the reference's
     threshold-vs-worst predicate F5 (src/index_graph.cpp:29-39) applied
@@ -613,56 +623,33 @@ def _tau_packed_map(l: int, out_blocks: int, r: int = 1):
     return it_fn
 
 
-def _sample_packed_kernel(
-    s: int, n_blocks: int, gate_l: int | None = None,
-    rev_seed: int | None = None,
-):
+def _sample_packed_kernel(s: int, n_blocks: int, rev_seed: int):
     """Stage 1 (packed): top-of-pool S per (vertex, flag), fwd + rev,
-    re-segmented into one packed row per destination block. With
-    ``gate_l`` set, TAU_NBR sentinel rows carrying each saturated
-    vertex's round-start pool worst ride the same segmentation to the
-    pairgen block for the reverse-push gate (see
-    nnd_fused._split_tau_and_gate). ``rev_seed`` (the round's pairgen
-    reservoir seed) engages the exact sender-side reverse pre-cut
-    (nnd_fused._sample_np)."""
+    re-segmented into one packed row per destination block.
+    ``rev_seed`` (the round's pairgen reservoir seed) drives the exact
+    sender-side reverse pre-cut (nnd_fused._sample_np)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return _empty(_SAMPLE_P_COLS)
-        src = _cat(pdf, "src", np.int64)
-        dist_in = _cat(pdf, "dist", np.float64)
-        key, nbr, isn, fwd, dist = _sample_np(
-            src,
+        key, nbr, isn, fwd = _sample_np(
+            _cat(pdf, "src", np.int64),
             _cat(pdf, "dst", np.int64),
             _cat(pdf, "is_new", np.uint8).astype(bool),
-            dist_in,
+            _cat(pdf, "dist", np.float64),
             s,
             rev_seed=rev_seed,
         )
-        if gate_l is not None:
-            t_ids, t_tau = _pool_tau_np(src, dist_in, gate_l)
-            if t_ids.size:
-                key = np.concatenate([key, t_ids])
-                nbr = np.concatenate(
-                    [nbr, np.full(t_ids.size, TAU_NBR, np.int64)]
-                )
-                z = np.zeros(t_ids.size, bool)
-                isn = np.concatenate([isn, z])
-                fwd = np.concatenate([fwd, z])
-                dist = np.concatenate([dist, t_tau])
         return _segment_rows(
             _blk_np(key, n_blocks),
             {"key": key, "nbr": nbr, "is_new": isn.astype(np.uint8),
-             "fwd": fwd.astype(np.uint8), "dist": dist},
+             "fwd": fwd.astype(np.uint8)},
         )
 
     return fn
 
 
-def _sample_packed_map(
-    s: int, n_blocks: int, gate_l: int | None = None,
-    rev_seed: int | None = None,
-):
+def _sample_packed_map(s: int, n_blocks: int, rev_seed: int):
     """Stage 1 as a NARROW map: the pool invariant is one packed row per
     block (pack_pool at init, _merge_packed_kernel every round), so each
     Arrow batch already holds complete per-vertex pools — rows are
@@ -673,7 +660,7 @@ def _sample_packed_map(
     follows pairs forward samples with reverse samples from OTHER
     blocks, so the sample->pairgen exchange stays the one semantically
     required pool-sized shuffle."""
-    fn = _sample_packed_kernel(s, n_blocks, gate_l, rev_seed)
+    fn = _sample_packed_kernel(s, n_blocks, rev_seed)
 
     def it_fn(it):
         for pdf in it:
@@ -710,21 +697,19 @@ def _clears_packed(it):
 
 
 def _pairgen_packed_kernel(s: int, seed: int, g_blocks: int, excl_bc):
-    """Stage 2 (packed): reverse-push gate + reverse reservoir cap +
-    local join + canonical dedupe, emitting 16-byte pair keys segmented
-    by g = blk(lo)."""
+    """Stage 2 (packed): reverse reservoir cap + local join + canonical
+    dedupe, emitting 16-byte pair keys segmented by g = blk(lo)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return _empty(_PAIR_P_COLS)
-        key, nbr, new, fwd = _split_tau_and_gate(
+        lo, hi = _canonical_pairs(
             _cat(pdf, "key", np.int64),
             _cat(pdf, "nbr", np.int64),
             _cat(pdf, "is_new", np.uint8).astype(bool),
             _cat(pdf, "fwd", np.uint8).astype(bool),
-            _cat(pdf, "dist", np.float64),
+            s, seed, excl_bc,
         )
-        lo, hi = _canonical_pairs(key, nbr, new, fwd, s, seed, excl_bc)
         if lo.size == 0:
             return _empty(_PAIR_P_COLS)
         return _segment_rows(
@@ -1003,7 +988,6 @@ def nn_descent_blocked(
     tau_filter: bool = True,
     tau_engage_rate: float = TAU_ENGAGE_RATE,
     payload: str = "fp32",
-    rev_push_gate: bool = False,
     min_recall: float | None = None,
     control_bc=None,
     control_total: int = 0,
@@ -1011,14 +995,8 @@ def nn_descent_blocked(
     """Blocked superstep loop — same contract as nnd_fused.nn_descent_fused
     but with NO broadcast-matrix requirement. Returns (pool, metrics);
     with ``final_k`` set the returned DataFrame is the finished graph
-    (per-src top-k, equal to topk_per_src of the pool).
-
-    ``payload="fp16"`` packs the sharded matrix (and therefore every
-    gathered vector) as float16 — half the shuffle bytes on the three
-    matrix edges the round-4 stage attribution measured as dominant,
-    at the cost of ~2^-11-relative distance rounding (recall-gated in
-    tests, A/B'd in BENCH.md). Default fp32 stays bit-identical to the
-    fused path.
+    (per-src top-k, equal to topk_per_src of the pool). The default fp32
+    payload stays bit-identical to the fused path.
 
     The exact-distance contract for ``payload="int8"`` holds only via
     the ``final_k`` re-rank below (the nn_descent front door always
@@ -1106,15 +1084,8 @@ def nn_descent_blocked(
         samples = (
             pool_p.mapInPandas(
                 # rev_seed == the pairgen reservoir seed below, so the
-                # sender-side pre-cut ranks exactly like the receiver.
-                # With the reverse-push gate ON the receiver gates
-                # arrivals BEFORE its reservoir, so a per-block ungated
-                # top-S is no longer a superset of the kept set — the
-                # pre-cut must stand down (exactness over bytes).
-                _sample_packed_map(
-                    s, B, l if rev_push_gate else None,
-                    rev_seed=None if rev_push_gate else seed + 3 * it + 2,
-                ),
+                # sender-side pre-cut ranks exactly like the receiver
+                _sample_packed_map(s, B, rev_seed=seed + 3 * it + 2),
                 SAMPLE_P_SCHEMA,
             )
             .persist()
@@ -1192,6 +1163,7 @@ def nn_descent_blocked(
             row_m["recall"] = round(rec, 4)
             row_m["recall_eval_sec"] = round(time.monotonic() - t_ev, 2)
             recall_stop = rec >= min_recall
+        row_m["recall_stop"] = recall_stop
         metrics.append(row_m)
         if recall_stop or rate < min_update_rate:
             break

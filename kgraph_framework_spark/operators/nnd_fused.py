@@ -41,7 +41,6 @@ the skew bound.
 
 from __future__ import annotations
 
-import os
 import time
 
 import numpy as np
@@ -55,9 +54,7 @@ from kgraph_framework_spark.plans.pregel import (
     truncate_state,
 )
 
-SAMPLE_SCHEMA = (
-    "blk int, key long, nbr long, is_new boolean, fwd boolean, dist double"
-)
+SAMPLE_SCHEMA = "blk int, key long, nbr long, is_new boolean, fwd boolean"
 CAND_SCHEMA = "blk int, src long, dst long, dist double, clear boolean"
 MERGE_SCHEMA = "src long, dst long, dist double, is_new boolean, fresh boolean"
 
@@ -94,11 +91,6 @@ def l2_gathered(
     np.take(out=) for the gathers, np.copyto for the exact f32->f64
     upcast, in-place subtract. Measured 20x+ faster than the fresh-
     allocation idiom on page-fault-slow hosts, identical outputs.
-
-    Matrix stores narrower than float32 (the blocked loop's fp16
-    gather payload) are accepted as-is: the gather buffers take the
-    store's dtype and np.copyto upcasts exactly, so the only rounding
-    is the one already paid when the payload was packed.
     """
     n = a.size
     out = np.empty(n, np.float64)
@@ -208,40 +200,6 @@ def _unpack2(pk: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return rec["a"].astype(np.int64), rec["b"].astype(np.int64)
 
 
-def _tau_lookup(t_ids: np.ndarray, t_tau: np.ndarray,
-                q: np.ndarray) -> np.ndarray:
-    """tau for each queried vertex id; +inf where the id has no finite
-    threshold (unsaturated pool). Callers interpret +inf per site: the
-    insertion filter keeps every candidate (dist <= tau), the
-    reverse-push gate admits every arrival (isinf short-circuit)."""
-    if t_ids.size == 0:
-        return np.full(q.size, np.inf)
-    idx = np.searchsorted(t_ids, q)
-    ok = idx < t_ids.size
-    idx0 = np.where(ok, idx, 0)
-    hit = ok & (t_ids[idx0] == q)
-    return np.where(hit, t_tau[idx0], np.inf)
-
-
-def _pool_tau_np(src: np.ndarray, dist: np.ndarray,
-                 l: int) -> tuple[np.ndarray, np.ndarray]:
-    """Per-vertex pool-worst thresholds: (sorted ids, max dist) for the
-    SATURATED vertices only (pool holds >= l entries). Unsaturated
-    vertices are omitted — their conceptual worst is +inf (any insert
-    accepted), which every lookup site treats as "no threshold"."""
-    if src.size == 0:
-        z = np.empty(0, np.int64)
-        return z, np.empty(0, np.float64)
-    o = np.argsort(src, kind="stable")
-    s_s, d_s = src[o], dist[o]
-    starts = np.flatnonzero(np.r_[True, s_s[1:] != s_s[:-1]])
-    ids = s_s[starts]
-    cnt = np.diff(np.append(starts, s_s.size))
-    tau = np.maximum.reduceat(d_s, starts)
-    m = cnt >= l
-    return ids[m], tau[m]
-
-
 def _member(sorted_pack: np.ndarray, q: np.ndarray) -> np.ndarray:
     if sorted_pack.size == 0 or q.size == 0:
         return np.zeros(q.size, bool)
@@ -280,12 +238,7 @@ def _order_target_dist(
 
 
 _SAMPLE_COLS = {"blk": "int32", "key": "int64", "nbr": "int64",
-                "is_new": "bool", "fwd": "bool", "dist": "float64"}
-
-#: sentinel ``nbr`` marking a tau threshold row in the sample stream
-#: (real neighbor ids are non-negative); its ``dist`` carries the
-#: keyed vertex's round-start pool worst for the reverse-push gate.
-TAU_NBR = -1
+                "is_new": "bool", "fwd": "bool"}
 _CAND_COLS = {"blk": "int32", "src": "int64", "dst": "int64",
               "dist": "float64", "clear": "bool"}
 _MERGE_COLS = {"src": "int64", "dst": "int64", "dist": "float64",
@@ -371,9 +324,7 @@ def score_sym_topk(pairs: DataFrame, bc, k: int) -> DataFrame:
     )
 
 
-def _sample_kernel(
-    s: int, seed: int, n_blocks: int, gate_l: int | None = None
-):
+def _sample_kernel(s: int, seed: int, n_blocks: int):
     """Stage 1: per-vertex S new + S old samples, emitted fwd + rev.
 
     Samples are TOP-OF-POOL — the S closest entries per flag, by (dist,
@@ -388,43 +339,22 @@ def _sample_kernel(
     (seed + 3*it + 2): it drives the exact sender-side reverse pre-cut
     (see _sample_np) whose per-block top-S order must match the
     receiver-side reservoir's.
-
-    With ``gate_l`` set, the kernel also emits one TAU_NBR sentinel row
-    per vertex whose round-start pool is saturated (>= gate_l entries),
-    carrying that vertex's pool worst in ``dist``. The sentinel's key IS
-    the vertex, so it rides the existing sample shuffle to exactly the
-    pairgen block where that vertex's reverse arrivals land — no extra
-    stage, no broadcast (see the reverse-push gate in _pairgen_kernel).
     """
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return _empty(_SAMPLE_COLS)
-        src = pdf["src"].to_numpy(np.int64)
-        dst = pdf["dst"].to_numpy(np.int64)
-        isn_in = pdf["is_new"].to_numpy(bool)
-        dist_in = pdf["dist"].to_numpy(np.float64)
-        # gate_l set == reverse-push gate on == pre-cut must stand down
-        # (the receiver gates before its reservoir; see the loop's
-        # call-site comment)
-        key, nbr, isn, fwd, dist = _sample_np(
-            src, dst, isn_in, dist_in, s,
-            rev_seed=None if gate_l is not None else seed,
+        key, nbr, isn, fwd = _sample_np(
+            pdf["src"].to_numpy(np.int64),
+            pdf["dst"].to_numpy(np.int64),
+            pdf["is_new"].to_numpy(bool),
+            pdf["dist"].to_numpy(np.float64),
+            s,
+            rev_seed=seed,
         )
-        if gate_l is not None:
-            t_ids, t_tau = _pool_tau_np(src, dist_in, gate_l)
-            if t_ids.size:
-                key = np.concatenate([key, t_ids])
-                nbr = np.concatenate(
-                    [nbr, np.full(t_ids.size, TAU_NBR, np.int64)]
-                )
-                z = np.zeros(t_ids.size, bool)
-                isn = np.concatenate([isn, z])
-                fwd = np.concatenate([fwd, z])
-                dist = np.concatenate([dist, t_tau])
         return pd.DataFrame(
             {"blk": _blk_np(key, n_blocks), "key": key, "nbr": nbr,
-             "is_new": isn, "fwd": fwd, "dist": dist}
+             "is_new": isn, "fwd": fwd}
         )
 
     return fn
@@ -437,16 +367,12 @@ def _sample_np(
     dist: np.ndarray,
     s: int,
     rev_seed: int | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Numpy core of the sample stage, shared with the packed blocked
     loop (operators/nnd_blocked): top-of-pool S per (vertex, flag),
-    emitted forward (keyed by src) and reverse (keyed by dst). Order-
-    insensitive: the lexsort totally orders the group's entries.
-
-    The emitted rows carry the edge distance so the pairgen site can
-    apply the reference's reverse-push gate (a reverse arrival is only
-    admitted when its distance exceeds the receiving vertex's pool
-    worst, src/index_graph.cpp:91-103 — see _canonical_pairs).
+    emitted forward (keyed by src) and reverse (keyed by dst) as
+    (key, nbr, is_new, fwd). Order-insensitive: the lexsort totally
+    orders the group's entries.
 
     ``rev_seed`` (the pairgen round's reservoir seed) enables the
     EXACT sender-side reverse pre-cut — the map-side combine of the
@@ -461,19 +387,15 @@ def _sample_np(
     reverse rows from ONE sender block, i.e. pool in-degree hubs
     (see BENCH.md reverse pre-cut section for the measured local
     effect)."""
-    if rev_seed is not None and os.environ.get("SPARK_GRAFT_NO_REV_PRECUT"):
-        rev_seed = None  # diagnostic A/B toggle (outputs are invariant)
     order = np.lexsort((dst, dist, new, src))
-    src_s, dst_s, new_s, dist_s = (
-        src[order], dst[order], new[order], dist[order]
-    )
+    src_s, dst_s, new_s = src[order], dst[order], new[order]
     change = np.empty(order.size, bool)
     if order.size:
         change[0] = True
         change[1:] = (src_s[1:] != src_s[:-1]) | (new_s[1:] != new_s[:-1])
     keep = _ranks(change) < s
-    ks, kd, kn, kdist = src_s[keep], dst_s[keep], new_s[keep], dist_s[keep]
-    rs, rd, rn, rdist = kd, ks, kn, kdist  # reverse rows: key=dst
+    ks, kd, kn = src_s[keep], dst_s[keep], new_s[keep]
+    rs, rd, rn = kd, ks, kn  # reverse rows: key=dst
     if rev_seed is not None and rs.size:
         hk = _hash_np(rd, rev_seed)
         ro = np.lexsort((rd, hk, rn, rs))
@@ -481,54 +403,12 @@ def _sample_np(
         rch[0] = True
         rch[1:] = (rs[ro][1:] != rs[ro][:-1]) | (rn[ro][1:] != rn[ro][:-1])
         rkeep = np.sort(ro[_ranks(rch) < s])
-        stats_dir = os.environ.get("SPARK_GRAFT_REV_STATS")
-        if stats_dir:
-            # diagnostic only: reverse rows emitted vs pre-cut away
-            with open(f"{stats_dir}/snd_{os.getpid()}.txt", "a") as fh:
-                fh.write(f"{rs.size} {rkeep.size}\n")
-        rs, rd, rn, rdist = rs[rkeep], rd[rkeep], rn[rkeep], rdist[rkeep]
+        rs, rd, rn = rs[rkeep], rd[rkeep], rn[rkeep]
     key = np.concatenate([ks, rs])
     nbr = np.concatenate([kd, rd])
     isn = np.concatenate([kn, rn])
     fwd = np.concatenate([np.ones(ks.size, bool), np.zeros(rs.size, bool)])
-    return key, nbr, isn, fwd, np.concatenate([kdist, rdist])
-
-
-def _split_tau_and_gate(
-    key: np.ndarray,
-    nbr: np.ndarray,
-    new: np.ndarray,
-    fwd: np.ndarray,
-    dist: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Reverse-push gate at the pairgen site — the reference's
-    ``nn->distance > nhood_o.pool.rbegin()->distance`` predicate
-    (src/index_graph.cpp:90-103): a reverse sample is admitted to the
-    receiver's candidate lists only when its edge distance EXCEEDS the
-    receiver's round-start pool worst. A closer edge is already in the
-    receiver's own pool (symmetric inserts; min-dedupe), so the receiver
-    samples it forward itself and the reverse copy is redundant.
-
-    TAU_NBR sentinel rows in the sample stream (see _sample_kernel)
-    carry the per-vertex thresholds; vertices without one (pool not yet
-    saturated — the reference's pools are always full, ours start at
-    K < L) conservatively admit every reverse arrival. Forward rows are
-    never dropped. Returns the gated (key, nbr, new, fwd)."""
-    tau_m = nbr == TAU_NBR
-    if not tau_m.any():
-        return key, nbr, new, fwd
-    t_ids, t_tau = key[tau_m], dist[tau_m]
-    to = np.argsort(t_ids, kind="stable")
-    t_ids, t_tau = t_ids[to], t_tau[to]
-    real = ~tau_m
-    key, nbr, new, fwd, dist = (
-        key[real], nbr[real], new[real], fwd[real], dist[real]
-    )
-    tau = _tau_lookup(t_ids, t_tau, key)
-    keep = fwd | np.isinf(tau) | (dist > tau)
-    if keep.all():
-        return key, nbr, new, fwd
-    return key[keep], nbr[keep], new[keep], fwd[keep]
+    return key, nbr, isn, fwd
 
 
 def _canonical_pairs(
@@ -561,14 +441,6 @@ def _canonical_pairs(
             new[rs][1:] != new[rs][:-1]
         )
         kept_rev = rs[_ranks(change) < s]
-        stats_dir = os.environ.get("SPARK_GRAFT_REV_STATS")
-        if stats_dir:
-            # diagnostic only (reverse pre-cut sizing, BENCH.md): how
-            # many reverse arrivals the receiver-side cap discards
-            with open(
-                f"{stats_dir}/rev_{os.getpid()}.txt", "a"
-            ) as fh:
-                fh.write(f"{ridx.size} {kept_rev.size}\n")
     kept = np.concatenate([np.flatnonzero(fwd), kept_rev])
     k2, n2, new2 = key[kept], nbr[kept], new[kept]
 
@@ -625,19 +497,16 @@ def _canonical_pairs(
 
 
 def _pairgen_kernel(s: int, l: int, seed: int, n_blocks: int, bc, excl_bc):
-    """Stage 2: reverse-push gate + reverse cap + local join + in-place
-    scoring + target cap."""
+    """Stage 2: reverse cap + local join + in-place scoring + target
+    cap."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return _empty(_CAND_COLS)
-        key, nbr, new, fwd = _split_tau_and_gate(
-            pdf["key"].to_numpy(np.int64),
-            pdf["nbr"].to_numpy(np.int64),
-            pdf["is_new"].to_numpy(bool),
-            pdf["fwd"].to_numpy(bool),
-            pdf["dist"].to_numpy(np.float64),
-        )
+        key = pdf["key"].to_numpy(np.int64)
+        nbr = pdf["nbr"].to_numpy(np.int64)
+        new = pdf["is_new"].to_numpy(bool)
+        fwd = pdf["fwd"].to_numpy(bool)
 
         lo, hi = _canonical_pairs(key, nbr, new, fwd, s, seed, excl_bc)
 
@@ -815,7 +684,6 @@ def nn_descent_fused(
     init: DataFrame | None = None,
     exclude_pairs: DataFrame | None = None,
     n_blocks: int | None = None,
-    rev_push_gate: bool = False,
     min_recall: float | None = None,
     control_df: DataFrame | None = None,
     control_total: int = 0,
@@ -823,11 +691,6 @@ def nn_descent_fused(
     """Fused superstep loop. ``bc`` is a knn_graph.broadcast_matrix handle
     (required — callers fall back to the join path without one). Returns
     (pool, metrics); the caller applies the final top-K cut.
-
-    ``rev_push_gate`` (reference parity; default OFF per the measured
-    A/B in BENCH.md — see knn_graph.nn_descent's docstring) admits a
-    reverse sample only when its distance exceeds the receiver's
-    round-start pool worst — see _split_tau_and_gate.
 
     ``min_recall`` + ``control_df``/``control_total`` (prepared by
     nn_descent) enable the reference's sampled-recall stop criterion
@@ -867,14 +730,8 @@ def nn_descent_fused(
         samples = pool_b.groupBy("blk").applyInPandas(
             # sample seed == this round's pairgen reservoir seed, so the
             # sender-side reverse pre-cut ranks exactly like the
-            # receiver-side reservoir (see _sample_np). With the
-            # reverse-push gate ON the receiver gates arrivals BEFORE
-            # its reservoir, so the per-block ungated top-S is no
-            # longer a superset of the kept set — pre-cut stands down.
-            _sample_kernel(
-                s, seed + 3 * it + 2, B,
-                l if rev_push_gate else None,
-            ),
+            # receiver-side reservoir (see _sample_np)
+            _sample_kernel(s, seed + 3 * it + 2, B),
             SAMPLE_SCHEMA,
         )
         cands = samples.groupBy("blk").applyInPandas(
@@ -911,6 +768,7 @@ def nn_descent_fused(
             row_m["recall"] = round(rec, 4)
             row_m["recall_eval_sec"] = round(time.monotonic() - t_ev, 2)
             recall_stop = rec >= min_recall
+        row_m["recall_stop"] = recall_stop
         metrics.append(row_m)
         if recall_stop or rate < min_update_rate:
             break

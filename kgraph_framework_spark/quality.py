@@ -128,6 +128,13 @@ def nndescent_gate(
     )
 
 
+def stopped_on_recall(metrics: list[dict]) -> bool:
+    """True iff a descent round stopped on the min_recall criterion —
+    read from the loop's own ``recall_stop`` flag, so a run that reaches
+    the threshold on exactly its last allowed round still counts."""
+    return any(m.get("recall_stop", False) for m in metrics)
+
+
 def nndescent_minrecall_gate(
     spark: SparkSession, emb: DataFrame, k: int = 10, max_iters: int = 12
 ) -> DataFrame:
@@ -137,9 +144,9 @@ def nndescent_minrecall_gate(
     :209-229) — instead of a fixed round count
     (nn_descent(min_recall=0.99), the update-rate stop disabled).
     recall_ok = 1 only if BOTH hold: the final graph clears the recall
-    floor AND the loop actually STOPPED on the criterion (fewer than
-    max_iters rounds with the last recorded pool recall >= 0.99) — a
-    loop that merely exhausts its iteration budget fails the gate."""
+    floor AND the loop actually STOPPED on the criterion (a round's
+    ``recall_stop`` flag, see :func:`stopped_on_recall`) — a loop that
+    merely exhausts its iteration budget fails the gate."""
     from kgraph_framework_spark.operators.knn_graph import (
         knn_bruteforce_l2,
         nn_descent,
@@ -149,10 +156,7 @@ def nndescent_minrecall_gate(
         spark, emb, k=k, max_iters=max_iters, min_recall=0.99,
         min_update_rate=0.0,
     )
-    stopped = (
-        len(metrics) < max_iters
-        and metrics[-1].get("recall", 0.0) >= 0.99
-    )
+    stopped = stopped_on_recall(metrics)
     truth = knn_bruteforce_l2(emb, k=k)
     row = _gate_row(
         graph.select("src", "dst"),

@@ -11,6 +11,13 @@ from kgraph_framework_spark.session import get_spark  # noqa: E402
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 
+# The fixtures are MB-sized, but get_spark's 48g production default lets
+# the one long-lived test JVM grow its heap past a small host's RAM
+# before collecting (measured: 15 GB RSS on a 15 GB, 4-core box, then
+# the kernel OOM killer ends the session mid-suite). A bounded heap makes
+# the JVM collect instead; an explicit SPARK_GRAFT_DRIVER_MEM still wins.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+
 
 @pytest.fixture(scope="session")
 def spark():

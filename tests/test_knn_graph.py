@@ -159,6 +159,10 @@ class TestMinRecallConvergence:
         # earlier rounds below the threshold must NOT have stopped
         for m in metrics[:-1]:
             assert m["recall"] < 0.3
+        # the stopping round says so explicitly; no other round does
+        assert [m["recall_stop"] for m in metrics] == (
+            [False] * (len(metrics) - 1) + [True]
+        )
 
     def test_blocked_recall_equals_fused(self, spark, emb):
         """packed_pool_recall (blocked) and the broadcast semi-join
@@ -171,3 +175,56 @@ class TestMinRecallConvergence:
             out[mode] = [r["recall"] for r in m]
         assert len(out["fused"]) == 2
         assert out["fused"] == out["blocked"]
+
+    def test_blocked_recall_stop_flag(self, spark, emb):
+        """The blocked loop flags the round that stops on min_recall,
+        even when it is the last allowed round."""
+        _, m = nn_descent(
+            spark, emb, k=K, max_iters=1, min_recall=0.0, mode="blocked"
+        )
+        assert [r["recall_stop"] for r in m] == [True]
+
+    def test_control_truth_offset_ids(self, spark, emb):
+        """Offset, gapped ids (1000 + 7i): a stride over raw id values
+        can select no id at all (here every id is 6 mod 7); the control
+        set must be drawn from real ids by rank and match the oracle."""
+        from kgraph_framework_spark.operators.knn_graph import control_truth
+
+        shifted = emb.select(
+            (F.col("vec_id") * 7 + 1000).alias("vec_id"), "embedding"
+        ).persist()
+        n = shifted.count()
+        ids = sorted(r["vec_id"] for r in shifted.select("vec_id").collect())
+        n_control = n // 7  # stride 7
+        ct = control_truth(spark, shifted, K, n_control=n_control).persist()
+        ctrl = {r["src"] for r in ct.select("src").distinct().collect()}
+        assert ctrl == set(ids[::7])
+        got = {(r["src"], r["dst"]) for r in ct.collect()}
+        truth = knn_bruteforce_l2(shifted, k=K)
+        exp = {
+            (r["src"], r["dst"])
+            for r in truth.collect()
+            if r["src"] in ctrl
+        }
+        assert len(got & exp) / max(len(exp), 1) >= 0.99
+        ct.unpersist()
+        shifted.unpersist()
+
+    def test_empty_control_set_raises(self, spark, emb):
+        empty = spark.createDataFrame([], "src long, dst long")
+        with pytest.raises(ValueError, match="control set is empty"):
+            nn_descent(
+                spark, emb, k=K, max_iters=1, min_recall=0.99,
+                control=empty,
+            )
+
+
+class TestKnobWarnings:
+    def test_block_bytes_warns_on_fused_path(self, spark, emb):
+        """block_bytes sizes the blocked loop only; a run that takes
+        the fused loop must say it ignored the knob."""
+        with pytest.warns(UserWarning, match="block_bytes"):
+            nn_descent(
+                spark, emb, k=K, max_iters=1, mode="fused",
+                block_bytes=1 << 20,
+            )

@@ -9,6 +9,8 @@ machinery is exercised on the small fixture.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -283,6 +285,43 @@ class TestBlockedVsFused:
         assert g.select("src").distinct().count() == emb.count()
 
 
+def _graph_checksum(graph) -> str:
+    """Order-independent checksum of a (src, dst, dist) graph: sha256
+    over the (src, dst)-sorted rows' little-endian int64/int64/float64
+    bytes, so any change to an edge or a distance bit shows."""
+    rows = np.array(
+        sorted((r["src"], r["dst"], r["dist"]) for r in graph.collect()),
+        dtype=[("s", "<i8"), ("d", "<i8"), ("x", "<f8")],
+    )
+    return hashlib.sha256(rows.tobytes()).hexdigest()
+
+
+class TestFrozenChecksums:
+    """Fixed-seed guard for refactors of the descent loops: the graph
+    checksum AND the per-round fresh-insert counts of each loop and
+    payload must stay bit-identical. Only a deliberate change to
+    sampling or scoring may re-pin these values."""
+
+    FUSED = "c626b9cbc14b5e57f60c976034038667e8452b61e53747343b8728d11777f066"
+    INT8 = "d11df19e025ec1f19841942f813abefa789ce411924ade768d18df3946da0a1d"
+
+    @pytest.mark.parametrize(
+        "kwargs, sha, new_entries",
+        [
+            ({"mode": "fused"}, FUSED, [14239, 7411, 2396]),
+            ({"mode": "blocked"}, FUSED, [14239, 7411, 2396]),
+            ({"payload": "int8"}, INT8, [14242, 7419, 2398]),
+        ],
+        ids=["fused", "blocked_fp32", "blocked_int8"],
+    )
+    def test_fixed_seed_checksum(self, spark, emb, kwargs, sha, new_entries):
+        g, m = nn_descent(spark, emb, k=K, max_iters=3, **kwargs)
+        assert _graph_checksum(g) == sha
+        assert [x["new_entries"] for x in m if "new_entries" in x] == (
+            new_entries
+        )
+
+
 class TestTauFilter:
     """Emit-site insertion-threshold filter (F5,
     /root/reference/src/index_graph.cpp:29-39): dropping candidates
@@ -326,6 +365,18 @@ class TestTauFilter:
         # all-unsaturated pool emits nothing at all
         assert list(_tau_packed_map(l=9, out_blocks=4)([row])) == []
 
+    def test_pool_tau_np_unit(self):
+        from kgraph_framework_spark.operators.nnd_blocked import _pool_tau_np
+
+        src = np.array([1, 2, 1, 1, 2], np.int64)
+        dist = np.array([9.0, 5.0, 1.0, 4.0, 2.0])
+        ids, tau = _pool_tau_np(src, dist, 3)
+        assert ids.tolist() == [1] and tau.tolist() == [9.0]
+        ids2, tau2 = _pool_tau_np(src, dist, 2)
+        assert ids2.tolist() == [1, 2] and tau2.tolist() == [9.0, 5.0]
+        ids0, _ = _pool_tau_np(np.empty(0, np.int64), np.empty(0), 1)
+        assert ids0.size == 0
+
     def test_tau_lookup_unit(self):
         from kgraph_framework_spark.operators.nnd_blocked import _tau_lookup
 
@@ -361,75 +412,6 @@ class TestTauFilter:
                 assert all(x["tau_engaged"] for x in m)
         assert outs[True] == outs[False]
         assert mets[True] == mets[False]
-
-
-class TestFp16Payload:
-    """payload="fp16" halves every matrix byte-edge of the blocked loop
-    (block shuffle, replicated hi cells, gathered u_mat packs) for
-    ~2^-11-relative distance rounding. fp32 must stay byte-exact."""
-
-    def test_fp16_blocks_half_bytes_and_decode(self, spark, emb):
-        from kgraph_framework_spark.operators.nnd_blocked import _mat_decode
-
-        f32 = build_emb_blocks(emb, 3).collect()
-        f16 = build_emb_blocks(emb, 3, payload="fp16").collect()
-        by_g32 = {r["g"]: r for r in f32}
-        assert len(f16) == len(f32)
-        for r in f16:
-            r32 = by_g32[r["g"]]
-            assert r["ids"] == r32["ids"]
-            assert len(r["mat"]) * 2 == len(r32["mat"])
-            X16 = _mat_decode(r["mat"], len(r["ids"]), r["dim"])
-            X32 = _mat_decode(r32["mat"], len(r32["ids"]), r32["dim"])
-            assert X16.dtype == np.float16 and X32.dtype == np.float32
-            assert np.array_equal(X16, X32.astype(np.float16))
-
-    def test_fp16_scoring_close(self, spark, emb):
-        """fp16-payload distances approximate the exact fp32 ones within
-        the fp16 rounding envelope, same pair set either way."""
-        ids = [r["vec_id"] for r in emb.select("vec_id").limit(12).collect()]
-        pairs = spark.createDataFrame(
-            [(int(a), int(b)) for a in ids[:6] for b in ids[6:]],
-            "a long, b long",
-        )
-        b32 = build_emb_blocks(emb, 3).persist()
-        b16 = build_emb_blocks(emb, 3, payload="fp16").persist()
-        got32 = {
-            (r["a"], r["b"]): r["dist"]
-            for r in score_pairs_blocked(pairs, b32, 3).collect()
-        }
-        got16 = {
-            (r["a"], r["b"]): r["dist"]
-            for r in score_pairs_blocked(pairs, b16, 3).collect()
-        }
-        b32.unpersist()
-        b16.unpersist()
-        assert set(got16) == set(got32)
-        d32 = np.array([got32[k_] for k_ in sorted(got32)])
-        d16 = np.array([got16[k_] for k_ in sorted(got32)])
-        # squared-L2 of fp16-rounded inputs: ~2*2^-11 relative + tiny abs
-        assert np.allclose(d16, d32, rtol=5e-3, atol=1e-4)
-        assert not np.array_equal(d16, d32)  # rounding actually happened
-
-    def test_fp16_recall_floor(self, spark, emb):
-        """The approximate payload must not dent recall on the fixture:
-        same >=0.9 floor as the exact blocked build."""
-        truth = knn_bruteforce_l2(emb, k=K).persist()
-        g, m = nn_descent(spark, emb, k=K, max_iters=6, payload="fp16")
-        r = graph_recall(g.select("src", "dst"), truth)
-        truth.unpersist()
-        assert r >= 0.9, f"fp16 recall {r:.3f}"
-        assert len(m) >= 1
-
-    def test_payload_validation(self, spark, emb):
-        with pytest.raises(ValueError):
-            nn_descent(spark, emb, k=K, mode="fused", payload="fp16")
-        with pytest.raises(ValueError):
-            nn_descent(spark, emb, k=K, mode="join", payload="fp16")
-        with pytest.raises(ValueError):
-            nn_descent(spark, emb, k=K, mode="fused", payload="int8")
-        with pytest.raises(ValueError):
-            nn_descent(spark, emb, k=K, payload="int4")
 
 
 class TestInt8Payload:
@@ -516,13 +498,43 @@ class TestInt8Payload:
         truth.unpersist()
         assert bad == 0 and n_edges > 0
 
-    def test_int8_rejects_tiny_dim(self, spark):
-        four_d = spark.createDataFrame(
-            [(i, [float(i), 0.0, 1.0, 2.0]) for i in range(8)],
-            "vec_id long, embedding array<float>",
-        )
-        with pytest.raises(Exception, match="dim > 4"):
-            build_emb_blocks(four_d, 2, payload="int8").collect()
+    def test_int8_tiny_dim_roundtrip(self, spark):
+        """int8's dim + 4 bytes/row never equals fp32's 4 * dim, so the
+        length-inferred wire layout decodes both payloads at any dim —
+        down to dim 1 — within the quantization envelope."""
+        from kgraph_framework_spark.operators.nnd_blocked import _mat_decode
+
+        rng = np.random.default_rng(3)
+        for dim in (1, 2, 3, 4):
+            X = rng.normal(size=(8, dim)).astype(np.float32)
+            df = spark.createDataFrame(
+                [(i, X[i].tolist()) for i in range(8)],
+                "vec_id long, embedding array<float>",
+            )
+            for payload in ("fp32", "int8"):
+                for r in build_emb_blocks(df, 2, payload=payload).collect():
+                    ids = np.asarray(r["ids"], np.int64)
+                    assert r["dim"] == dim
+                    got = _mat_decode(r["mat"], ids.size, dim)
+                    assert got.dtype == np.float32
+                    want = X[ids]
+                    if payload == "fp32":
+                        assert np.array_equal(got, want)
+                    else:
+                        assert len(r["mat"]) == ids.size * (dim + 4)
+                        tol = (np.abs(want).max(axis=1, keepdims=True)
+                               / 254.0 + 1e-12)
+                        assert np.all(np.abs(got - want) <= tol)
+
+    def test_payload_validation(self, spark, emb):
+        with pytest.raises(ValueError):
+            nn_descent(spark, emb, k=K, mode="fused", payload="fp16")
+        with pytest.raises(ValueError):
+            nn_descent(spark, emb, k=K, mode="join", payload="fp16")
+        with pytest.raises(ValueError):
+            nn_descent(spark, emb, k=K, mode="fused", payload="int8")
+        with pytest.raises(ValueError):
+            nn_descent(spark, emb, k=K, payload="int4")
 
 
 class TestStaticSideExchangeReuse:

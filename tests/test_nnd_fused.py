@@ -116,73 +116,9 @@ class TestFusedVsJoin:
 
 
 class TestRevPushGate:
-    """Reverse-push gate (src/index_graph.cpp:90-103): a reverse sample
-    is admitted only when its edge distance exceeds the receiver's
-    round-start pool worst; unsaturated receivers (no finite tau) admit
-    everything; forward rows are never touched."""
-
-    def test_pool_tau_np_unit(self):
-        from kgraph_framework_spark.operators.nnd_fused import _pool_tau_np
-
-        src = np.array([1, 2, 1, 1, 2], np.int64)
-        dist = np.array([9.0, 5.0, 1.0, 4.0, 2.0])
-        ids, tau = _pool_tau_np(src, dist, 3)
-        assert ids.tolist() == [1] and tau.tolist() == [9.0]
-        ids2, tau2 = _pool_tau_np(src, dist, 2)
-        assert ids2.tolist() == [1, 2] and tau2.tolist() == [9.0, 5.0]
-        ids0, _ = _pool_tau_np(np.empty(0, np.int64), np.empty(0), 1)
-        assert ids0.size == 0
-
-    def test_split_tau_and_gate_unit(self):
-        from kgraph_framework_spark.operators.nnd_fused import (
-            TAU_NBR,
-            _split_tau_and_gate,
-        )
-
-        # sentinel: vertex 5 has tau = 2.0; vertex 7 unsaturated (no row)
-        key = np.array([5, 5, 5, 5, 7, 5], np.int64)
-        nbr = np.array([9, 8, 7, 6, 5, TAU_NBR], np.int64)
-        new = np.array([1, 1, 0, 1, 1, 0], bool)
-        fwd = np.array([1, 0, 0, 0, 0, 0], bool)
-        dist = np.array([1.0, 1.5, 2.5, 2.0, 0.1, 2.0])
-        k2, n2, new2, f2 = _split_tau_and_gate(key, nbr, new, fwd, dist)
-        got = set(zip(k2.tolist(), n2.tolist()))
-        # fwd (5,9) kept; rev (5,8) d=1.5<=tau dropped; rev (5,7)
-        # d=2.5>tau kept; rev (5,6) d=2.0==tau dropped (strict >);
-        # rev (7,5) no tau -> kept; sentinel row removed
-        assert got == {(5, 9), (5, 7), (7, 5)}
-        assert TAU_NBR not in n2.tolist()
-
-    def test_no_sentinels_identity(self):
-        from kgraph_framework_spark.operators.nnd_fused import (
-            _split_tau_and_gate,
-        )
-
-        key = np.array([1, 2], np.int64)
-        nbr = np.array([2, 1], np.int64)
-        new = np.array([1, 0], bool)
-        fwd = np.array([0, 0], bool)
-        dist = np.array([0.5, 0.5])
-        k2, n2, new2, f2 = _split_tau_and_gate(key, nbr, new, fwd, dist)
-        assert k2.tolist() == [1, 2] and n2.tolist() == [2, 1]
-
-    def test_gate_on_paths_bit_identical(self, spark, emb):
-        """The GATED loops must stay bit-identical across fused and
-        blocked (the ungated default pair is covered by
-        TestBlockedVsFused.test_bit_identical_graph)."""
-        gf, mf = nn_descent(
-            spark, emb, k=K, max_iters=2, rev_push_gate=True
-        )
-        gb, mb = nn_descent(
-            spark, emb, k=K, max_iters=2, mode="blocked",
-            rev_push_gate=True,
-        )
-        assert gf.orderBy("src", "dst").collect() == gb.orderBy(
-            "src", "dst"
-        ).collect()
-        assert [m["new_entries"] for m in mf] == [
-            m["new_entries"] for m in mb
-        ]
+    """Reverse pushes (src/index_graph.cpp:78-113): the sender-side
+    pre-cut of reverse samples must be invisible to the receiver-side
+    reservoir cap."""
 
     def test_precut_exact_vs_receiver_reservoir(self):
         """The sender-side reverse pre-cut (map-side combine of the
@@ -217,12 +153,12 @@ class TestRevPushGate:
                 _sample_np(*b, s, rev_seed=rev_seed) for b in blocks
             ]
             outs[rev_seed] = tuple(
-                np.concatenate([p[i] for p in parts]) for i in range(5)
+                np.concatenate([p[i] for p in parts]) for i in range(4)
             )
         # the pre-cut must bite on the hub's reverse fan-in
         assert outs[seed][0].size < outs[None][0].size
         # forward rows untouched
-        for i in range(5):
+        for i in range(4):
             assert np.array_equal(
                 outs[seed][i][outs[seed][3].astype(bool)],
                 outs[None][i][outs[None][3].astype(bool)],
@@ -235,20 +171,3 @@ class TestRevPushGate:
         assert pairs[None][0].tolist() == pairs[seed][0].tolist()
         assert pairs[None][1].tolist() == pairs[seed][1].tolist()
         assert pairs[None][0].size > 0
-
-    def test_gate_reaches_floor_and_shrinks_updates(self, spark, emb):
-        """Gated descent holds the recall floor; once pools saturate the
-        gate admits strictly fewer reverse arrivals, so the per-round
-        fresh-insert counts must not EXCEED the ungated loop's."""
-        truth = knn_bruteforce_l2(emb, k=K).persist()
-        g_on, m_on = nn_descent(
-            spark, emb, k=K, max_iters=6, rev_push_gate=True
-        )
-        g_off, m_off = nn_descent(
-            spark, emb, k=K, max_iters=6, rev_push_gate=False
-        )
-        r_on = graph_recall(g_on.select("src", "dst"), truth)
-        r_off = graph_recall(g_off.select("src", "dst"), truth)
-        truth.unpersist()
-        assert r_on >= 0.9, f"gated recall {r_on:.3f}"
-        assert r_off >= 0.9, f"ungated recall {r_off:.3f}"

@@ -22,6 +22,7 @@ from kgraph_framework_spark.quality import (
     lsh_gate_sql,
     nndescent_gate,
     nndescent_gate_sql,
+    stopped_on_recall,
 )
 
 SF_TINY = "/root/testdata/sf0.001"
@@ -85,6 +86,42 @@ class TestGatesCanFail:
             )
         )
         assert r["recall_ok"] == 0
+
+
+class TestMinRecallStopPredicate:
+    """nndescent_minrecall_gate's "stopped on the criterion" half reads
+    the loop's explicit recall_stop flag, not the round count."""
+
+    def test_stop_on_last_allowed_round_passes(self):
+        # max_iters = 3, threshold reached on exactly round 3
+        metrics = [
+            {"superstep": 0, "recall": 0.71, "recall_stop": False},
+            {"superstep": 1, "recall": 0.95, "recall_stop": False},
+            {"superstep": 2, "recall": 0.993, "recall_stop": True},
+        ]
+        assert stopped_on_recall(metrics)
+
+    def test_early_stop_passes(self):
+        assert stopped_on_recall(
+            [{"superstep": 0, "recall": 0.995, "recall_stop": True}]
+        )
+
+    def test_budget_exhausted_fails(self):
+        metrics = [
+            {"superstep": i, "recall": 0.9, "recall_stop": False}
+            for i in range(3)
+        ]
+        assert not stopped_on_recall(metrics)
+
+    def test_update_rate_stop_fails(self):
+        # a short run that stopped on the update rate, not on recall
+        metrics = [{"superstep": 0, "recall": 0.999, "update_rate": 0.0,
+                    "recall_stop": False}]
+        assert not stopped_on_recall(metrics)
+
+    def test_no_flag_or_no_rounds_fails(self):
+        assert not stopped_on_recall([])
+        assert not stopped_on_recall([{"superstep": 0, "recall": 0.999}])
 
 
 class TestOracleTwins:

@@ -183,16 +183,10 @@ def main() -> None:
         "cogroup-gather path at any corpus size (the 100-TB shape)",
     )
     ap.add_argument(
-        "--payload", choices=("fp32", "fp16", "int8"), default="fp32",
-        help="matrix byte-edge precision for the blocked loop: fp16 "
-        "halves the gather/replica shuffle bytes (~2^-11 distance "
-        "rounding; forces mode=blocked)",
-    )
-    ap.add_argument(
-        "--rev-gate", action="store_true",
-        help="enable the reference's reverse-push gate (admit a reverse "
-        "sample only when its distance exceeds the receiver's pool "
-        "worst) — default off per the measured A/B in BENCH.md",
+        "--payload", choices=("fp32", "int8"), default="fp32",
+        help="matrix byte-edge precision for the blocked loop: int8 "
+        "cuts the gather/replica shuffle bytes ~4x (exact fp32 re-rank "
+        "of the final band; forces mode=blocked)",
     )
     ap.add_argument(
         "--block-bytes", type=int, default=None,
@@ -247,7 +241,6 @@ def main() -> None:
     graph, metrics = nn_descent(
         spark, emb, k=k, l=args.l, s=args.s, max_iters=iters, init=init,
         mode=args.mode, payload=args.payload,
-        rev_push_gate=args.rev_gate,
         min_recall=args.min_recall, control=ctrl,
         block_bytes=args.block_bytes,
     )
@@ -267,7 +260,6 @@ def main() -> None:
         "dim": DIM,
         "mode": args.mode,
         "payload": args.payload,
-        "rev_push_gate": args.rev_gate,
         "min_recall": args.min_recall,
         "block_bytes": args.block_bytes,
         "structure": args.structure,

@@ -11,7 +11,7 @@ pairgen -> gather-1 -> gather-2 -> merge).
 Usage: python tools/nnd_stage_probe.py [n_vecs] [dim] [rounds] [cores] [tau]
                                        [payload]
 (tau: 1=emit-site threshold filter on [default], 0=off — for the A/B.
-payload: fp32 [default] / fp16 / int8 — for the wire-payload byte A/B;
+payload: fp32 [default] / int8 — for the wire-payload byte A/B;
 shuffle bytes are deterministic, so one run per payload decides it.)
 Prints a per-stage table (desc by executorRunTime) plus one JSON line.
 """
