@@ -114,14 +114,6 @@ def main() -> None:
     )
     extra["cc_star_supersteps"] = ccs.supersteps
 
-    from kgraph_framework_spark.plans.components import connected_components_csr
-
-    ccc = timed(
-        "components_csr_converged",
-        lambda: connected_components_csr(spark, edges, max_iters=60),
-    )
-    extra["cc_csr_supersteps"] = ccc.supersteps
-
     timed("labelprop_5round", lambda: label_propagation(spark, edges, num_iters=5))
     timed("triangles_tools", lambda: count_triangles(tool_cousage_edges(t)))
     timed("degrees", lambda: q_degrees(spark, sf_dir).count())

@@ -125,55 +125,6 @@ def build_csr_blocks(edges: DataFrame, n_parts: int) -> DataFrame:
     )
 
 
-CSC_SCHEMA = (
-    "part_id int, src_uniq array<long>, src_codes array<int>, "
-    "dst_ids array<long>, dst_indptr array<int>"
-)
-
-
-def build_csc_blocks(edges: DataFrame, n_parts: int) -> DataFrame:
-    """Pack (src,dst) edges into dst-grouped per-partition blocks (CSC —
-    the transpose of :func:`build_csr_blocks`), partitioned by pmod(src).
-
-    Layout per block: edges sorted by dst; ``dst_ids``/``dst_indptr``
-    delimit each destination's incoming-edge segment; the per-edge src
-    column is dictionary-coded against the block's sorted ``src_uniq``.
-    Built for scatter-MIN supersteps (connected components): the gather
-    side (src labels) is co-partitioned by the same pmod, so a superstep
-    is one exact ``searchsorted`` gather + one ``minimum.reduceat``
-    segment-min over static offsets — no per-superstep sort, no
-    ``ufunc.at``, and the block emits each distinct dst once (map-side
-    combine), exactly like the PageRank CSR scatter's bincount.
-    """
-    e = edges.select(
-        F.col("src_vertex").alias("src"), F.col("dst_vertex").alias("dst")
-    ).withColumn("part_id", part_col(F.col("src"), n_parts))
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["dst", "src"], kind="mergesort")
-        dst = pdf["dst"].to_numpy(np.int64)
-        dst_ids, starts = np.unique(dst, return_index=True)
-        indptr = np.append(starts, len(dst)).astype(np.int32)
-        src_uniq, src_codes = np.unique(
-            pdf["src"].to_numpy(np.int64), return_inverse=True
-        )
-        return pd.DataFrame(
-            {
-                "part_id": [int(pdf["part_id"].iloc[0])],
-                "src_uniq": [src_uniq],
-                "src_codes": [src_codes.astype(np.int32)],
-                "dst_ids": [dst_ids],
-                "dst_indptr": [indptr],
-            }
-        )
-
-    return (
-        e.repartition(n_parts, "part_id")
-        .groupBy("part_id")
-        .applyInPandas(pack, schema=CSC_SCHEMA)
-    )
-
-
 def csr_roundtrip_edges(csr: DataFrame) -> DataFrame:
     """Unpack CSR blocks back to (src, dst, wnorm) — for roundtrip tests."""
 

@@ -13,7 +13,7 @@ Pipeline (reference lifecycle E1, SURVEY.md §3):
          reverse lists, reservoir-capped at S    (:78-113)
          candidate pairs: new x new (a<b) + new x old  (join(), :20-45,
                                                   neighbor.h:86-98)
-         score pairs (vectorized L2 pandas UDF — the distance kernel,
+         score pairs (vectorized numpy L2 — the distance kernel,
                                                   distance.h:23-129)
          symmetric insert into both endpoints' pools
          per-vertex top-L re-aggregation         (pool = neighbor.h:39-99)
@@ -28,29 +28,20 @@ the unseeded-rand hazard of SURVEY.md §4; ours is reproducible). All
 pool orderings tie-break by (dist, id) exactly like the reference's
 Neighbor ordering (include/commom/neighbor.h:24-34).
 
-Scale design: the candidate-pair generation is a per-vertex self-join of
-bounded sample lists (<= 2S ids per vertex -> <= (2S)^2 pairs), so the
-superstep's join volume is N * O(S^2) — independent of hub structure; the
-reverse-list reservoir cap is the skew bound (J8 in SURVEY.md §2.3). The
-distance kernel gathers both embeddings via two co-partitioned joins
-against the (persisted, bucketed-by-id) vector table and evaluates inside
-an Arrow batch with one numpy expression.
+Scale design: ``nn_descent`` runs each superstep as three grouped Arrow
+kernels (sample, pairgen, merge). Below the measured crossover the
+corpus matrix is broadcast and scored in place (operators/nnd_fused);
+above it the matrix is sharded into cogrouped blocks (operators/
+nnd_blocked). Both cap reverse lists at S, the skew bound (J8 in
+SURVEY.md §2.3).
 """
 
 from __future__ import annotations
-
-import time
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from kgraph_framework_spark.plans.pregel import (
-    reclaim_shuffles,
-    release_state,
-    truncate_state,
-)
 
 
 def _hash_order(*cols):
@@ -303,8 +294,8 @@ def nn_descent(
     sharded into cogrouped blocks, no broadcast: the 100-TB shape, and
     the faster one on big corpora); "blocked" forces the blocked loop
     at any size;
-    "fused" asserts the broadcast fits; "join" forces the legacy
-    join-based loop below (kept as the cross-checked slow path).
+    "fused" asserts the broadcast fits. Any other value raises
+    ValueError.
 
     ``payload`` is "fp32" (exact) or "int8" (blocked loop only; forces
     it so the knob is never silently ignored). int8 ships
@@ -340,12 +331,14 @@ def nn_descent(
     here: per-round gather bytes ~ (corpus_bytes / block_bytes) x
     corpus, so larger blocks cut single-box scratch-disk quadratically
     at higher per-task working memory (BENCH.md high-dim section).
-    Passing it to a run that takes the fused or join loop warns.
+    Passing it to a run that takes the fused loop warns.
     """
+    if mode not in ("auto", "fused", "blocked"):
+        raise ValueError(f"unknown mode {mode!r}")
     if payload not in ("fp32", "int8"):
         raise ValueError(f"unknown payload {payload!r}")
     if payload != "fp32":
-        if mode in ("fused", "join"):
+        if mode == "fused":
             raise ValueError(f"payload={payload!r} requires the blocked loop")
         mode = "blocked"
     if l is None:
@@ -368,7 +361,6 @@ def nn_descent(
                 "min_recall is set but the control set is empty"
             )
         control_df = spark.createDataFrame(control_pdf, "src long, dst long")
-    n_edges_target = None
     bc = None
     if mode == "fused":
         bc = broadcast_matrix(emb, min_vecs=1)
@@ -381,216 +373,64 @@ def nn_descent(
         )
     if mode == "fused" and bc is None:
         raise ValueError("mode='fused' but corpus exceeds broadcast cap")
-    if block_bytes is not None and (bc is not None or mode == "join"):
-        import warnings
-
-        warnings.warn(
-            "block_bytes only sizes the blocked loop's embedding blocks; "
-            f"this run takes the {'fused' if bc is not None else 'join'} "
-            "loop and ignores it",
-            stacklevel=2,
-        )
-    if bc is not None or mode in ("blocked", "auto"):
+    if bc is not None:
         from kgraph_framework_spark.operators.nnd_fused import (
+            auto_n_blocks,
             nn_descent_fused,
             topk_per_src,
         )
 
-        from kgraph_framework_spark.operators.nnd_fused import auto_n_blocks
+        if block_bytes is not None:
+            import warnings
 
-        if bc is not None:
-            n_vecs = len(bc.value[0])
-            pool, metrics = nn_descent_fused(
-                spark, emb, bc, k=k, l=l, s=s, max_iters=max_iters,
-                min_update_rate=min_update_rate, seed=seed, init=init,
-                exclude_pairs=exclude_pairs,
-                min_recall=min_recall, control_df=control_df,
-                control_total=control_total,
+            warnings.warn(
+                "block_bytes only sizes the blocked loop's embedding "
+                "blocks; this run takes the fused loop and ignores it",
+                stacklevel=2,
             )
-        else:
-            # beyond the broadcast cap (or forced): same kernels, matrix
-            # sharded into cogrouped blocks — no single-node requirement
-            from kgraph_framework_spark.operators.nnd_blocked import (
-                nn_descent_blocked,
-            )
-
-            control_bc = None
-            if control_pdf is not None:
-                from kgraph_framework_spark.operators.nnd_fused import _pack2
-
-                s_arr = control_pdf["src"].to_numpy(np.int64)
-                d_arr = control_pdf["dst"].to_numpy(np.int64)
-                control_bc = spark.sparkContext.broadcast(
-                    (np.unique(s_arr), np.sort(_pack2(s_arr, d_arr)))
-                )
-            # final_k: the packed merge already leaves each block's pool
-            # per-src sorted and deduped, so the blocked loop cuts top-k
-            # in place while unpacking — no extra topk shuffle
-            bb = {}
-            if block_bytes is not None:
-                bb["block_bytes"] = block_bytes
-            graph, metrics = nn_descent_blocked(
-                spark, emb, k=k, l=l, s=s, max_iters=max_iters,
-                min_update_rate=min_update_rate, seed=seed, init=init,
-                exclude_pairs=exclude_pairs, final_k=k, payload=payload,
-                min_recall=min_recall, control_bc=control_bc,
-                control_total=control_total, **bb,
-            )
-            if control_bc is not None:
-                control_bc.unpersist()
-            emb.unpersist()
-            return graph, metrics
+        pool, metrics = nn_descent_fused(
+            spark, emb, bc, k=k, l=l, s=s, max_iters=max_iters,
+            min_update_rate=min_update_rate, seed=seed, init=init,
+            exclude_pairs=exclude_pairs,
+            min_recall=min_recall, control_df=control_df,
+            control_total=control_total,
+        )
         B = auto_n_blocks(
-            spark.sparkContext.defaultParallelism, n_vecs, l
+            spark.sparkContext.defaultParallelism, len(bc.value[0]), l
         )
         graph = topk_per_src(pool.select("src", "dst", "dist"), k, B)
-        if bc is not None:
-            bc.unpersist()
+        bc.unpersist()
         emb.unpersist()
         return graph, metrics
 
-    pool = init if init is not None else random_init(emb, k, seed)
-    # score the init (reference scores on first refine pass)
-    scored = _score_pairs(
-        pool.select(F.col("src").alias("a"), F.col("dst").alias("b")), emb, bc
+    # beyond the broadcast cap (or forced): same kernels, matrix sharded
+    # into cogrouped blocks — no single-node requirement
+    from kgraph_framework_spark.operators.nnd_blocked import nn_descent_blocked
+
+    control_bc = None
+    if control_pdf is not None:
+        from kgraph_framework_spark.operators.nnd_fused import _pack2
+
+        s_arr = control_pdf["src"].to_numpy(np.int64)
+        d_arr = control_pdf["dst"].to_numpy(np.int64)
+        control_bc = spark.sparkContext.broadcast(
+            (np.unique(s_arr), np.sort(_pack2(s_arr, d_arr)))
+        )
+    # final_k: the packed merge already leaves each block's pool per-src
+    # sorted and deduped, so the blocked loop cuts top-k in place while
+    # unpacking — no extra topk shuffle
+    bb = {}
+    if block_bytes is not None:
+        bb["block_bytes"] = block_bytes
+    graph, metrics = nn_descent_blocked(
+        spark, emb, k=k, l=l, s=s, max_iters=max_iters,
+        min_update_rate=min_update_rate, seed=seed, init=init,
+        exclude_pairs=exclude_pairs, final_k=k, payload=payload,
+        min_recall=min_recall, control_bc=control_bc,
+        control_total=control_total, **bb,
     )
-    pool = scored.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "dist",
-        F.lit(True).alias("is_new"),
-    )
-    pool = truncate_state(spark, pool)
-    metrics: list[dict] = []
-    n_vecs_join = emb.count()  # emb persisted above; gates reclaim
-
-    for it in range(max_iters):
-        t_round = time.monotonic()
-        # --- sample S new and S old per vertex: TOP-OF-POOL, the S
-        # closest per flag by (dist, dst) — the reference scans pools in
-        # ascending distance order (update(), :62-77) ---
-        sampled = pool.withColumn("srn", F.row_number().over(
-            Window.partitionBy("src", "is_new").orderBy("dist", "dst")
-        )).where(F.col("srn") <= s)
-
-        fwd = sampled.select("src", "dst", "is_new")
-        # forward-sampled NEW pairs: exactly these get their flag cleared
-        # after the join (reference clears flags of the sampled nn_new
-        # only, src/index_graph.cpp:88-111 — unsampled new entries keep
-        # their flag and get another chance next round)
-        joined_now = fwd.where(F.col("is_new")).select("src", "dst")
-        # reverse lists with reservoir cap S (J8, :78-113)
-        rev = (
-            fwd.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "is_new"
-            )
-            .withColumn(
-                "rrn",
-                F.row_number().over(
-                    Window.partitionBy("src", "is_new").orderBy(
-                        _hash_order(F.col("dst"), F.lit(seed + it * 3 + 2))
-                    )
-                ),
-            )
-            .where(F.col("rrn") <= s)
-            .drop("rrn")
-        )
-        lists = fwd.unionByName(rev).dropDuplicates(["src", "dst", "is_new"])
-
-        # --- local join: new x new (a<b) + new x old (neighbor.h:86-98) ---
-        ln = lists.where(F.col("is_new")).select("src", F.col("dst").alias("a"))
-        lo = lists.where(~F.col("is_new")).select("src", F.col("dst").alias("b"))
-        nn = (
-            ln.join(ln.select("src", F.col("a").alias("b")), "src")
-            .where(F.col("a") < F.col("b"))
-        )
-        no = ln.join(lo, "src").where(F.col("a") != F.col("b"))
-        pairs = (
-            nn.select("a", "b").unionByName(no.select("a", "b")).distinct()
-        )
-        if exclude_pairs is not None:
-            # canonical-order anti-join: (a,b) and (b,a) both skip
-            pairs = (
-                pairs.withColumn("ca", F.least("a", "b"))
-                .withColumn("cb", F.greatest("a", "b"))
-                .join(
-                    exclude_pairs.select(
-                        F.least("a", "b").alias("ca"),
-                        F.greatest("a", "b").alias("cb"),
-                    ).distinct(),
-                    ["ca", "cb"],
-                    "left_anti",
-                )
-                .select("a", "b")
-            )
-
-        scored = _score_pairs(pairs, emb, bc)
-        sym = scored.unionByName(
-            scored.select(
-                F.col("b").alias("a"), F.col("a").alias("b"), "dist"
-            )
-        ).select(F.col("a").alias("src"), F.col("b").alias("dst"), "dist")
-
-        # --- merge into pools, re-topL, maintain flags ---
-        old_pool = pool.select("src", "dst", "dist")
-        merged = old_pool.unionByName(sym).groupBy("src", "dst").agg(
-            F.min("dist").alias("dist")
-        )
-        wtop = Window.partitionBy("src").orderBy("dist", "dst")
-        topl = merged.withColumn("rn", F.row_number().over(wtop)).where(
-            F.col("rn") <= l
-        ).drop("rn")
-        new_pool = (
-            topl.join(
-                pool.select("src", "dst", F.col("is_new").alias("old_new")),
-                ["src", "dst"],
-                "left",
-            )
-            .join(
-                joined_now.withColumn("joined", F.lit(True)),
-                ["src", "dst"],
-                "left",
-            )
-            .select(
-                "src", "dst", "dist",
-                F.when(F.col("old_new").isNull(), F.lit(True))  # fresh insert
-                .otherwise(F.col("old_new") & F.col("joined").isNull())
-                .alias("is_new"),
-                F.col("old_new").isNull().alias("fresh"),
-            )
-        )
-        new_pool = truncate_state(spark, new_pool)
-        updates = new_pool.where(F.col("fresh")).count()
-        release_state(pool)
-        reclaim_shuffles(spark, n_vecs_join)
-        if n_edges_target is None:
-            n_edges_target = new_pool.count()
-        rate = updates / max(n_edges_target, 1)
-        row_m = {"superstep": it, "new_entries": int(updates),
-                 "update_rate": rate,
-                 "wall_sec": round(time.monotonic() - t_round, 2)}
-        pool = new_pool
-        recall_stop = False
-        if min_recall is not None and control_df is not None:
-            t_ev = time.monotonic()
-            hits = pool.join(
-                F.broadcast(control_df), ["src", "dst"], "left_semi"
-            ).count()
-            rec = hits / max(control_total, 1)
-            row_m["recall"] = round(rec, 4)
-            row_m["recall_eval_sec"] = round(time.monotonic() - t_ev, 2)
-            recall_stop = rec >= min_recall
-        row_m["recall_stop"] = recall_stop
-        metrics.append(row_m)
-        if recall_stop or rate < min_update_rate:
-            break
-
-    wk = Window.partitionBy("src").orderBy("dist", "dst")
-    graph = (
-        pool.withColumn("rn", F.row_number().over(wk))
-        .where(F.col("rn") <= k)
-        .select("src", "dst", "dist")
-    )
-    if bc is not None:
-        bc.unpersist()  # non-destructive: re-ships lazily if re-referenced
+    if control_bc is not None:
+        control_bc.unpersist()
     emb.unpersist()
     return graph, metrics
 

@@ -689,7 +689,7 @@ def nn_descent_fused(
     control_total: int = 0,
 ) -> tuple[DataFrame, list[dict]]:
     """Fused superstep loop. ``bc`` is a knn_graph.broadcast_matrix handle
-    (required — callers fall back to the join path without one). Returns
+    (required — callers take the blocked loop without one). Returns
     (pool, metrics); the caller applies the final top-K cut.
 
     ``min_recall`` + ``control_df``/``control_total`` (prepared by

@@ -1,7 +1,6 @@
 from kgraph_framework_spark.plans.pagerank import pagerank
 from kgraph_framework_spark.plans.components import (
     connected_components,
-    connected_components_csr,
     connected_components_star,
 )
 from kgraph_framework_spark.plans.labelprop import label_propagation
@@ -10,7 +9,6 @@ from kgraph_framework_spark.plans.triangles import count_triangles, triangles_pe
 __all__ = [
     "pagerank",
     "connected_components",
-    "connected_components_csr",
     "connected_components_star",
     "label_propagation",
     "count_triangles",

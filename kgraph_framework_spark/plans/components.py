@@ -18,8 +18,6 @@ handful of rounds.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -148,150 +146,6 @@ def connected_components_star(
     )
     result.state = labels
     vertices.unpersist()
-    return result
-
-
-def connected_components_csr(
-    spark: SparkSession,
-    edges: DataFrame,
-    max_iters: int = 50,
-    num_iters: int | None = None,
-    symmetrize: bool = True,
-    checkpoint_dir: str | None = None,
-    n_parts: int | None = None,
-    resume: bool = True,
-    accelerate: bool | None = None,
-) -> PregelResult:
-    """Hash-min CC over packed CSC blocks — same semantics and output as
-    :func:`connected_components` (labels EXACTLY equal; integer min has
-    no float-order ambiguity), with the per-superstep neighbor-min
-    running inside Arrow-batched numpy instead of a row join.
-
-    The symmetrized edge set is packed ONCE (operators/csr.py
-    build_csc_blocks, dst-grouped, src dictionary-coded, partitioned by
-    pmod(src)); each superstep cogroups the static blocks with the label
-    vector partitioned the same way, gathers src labels with one exact
-    ``searchsorted``, segment-mins per destination with
-    ``minimum.reduceat`` over the build-time offsets, and emits each
-    block-distinct dst once — the same pre-aggregated shuffle bound as
-    pagerank_csr (distinct dsts per block, not edges). ``accelerate``
-    adds the same pointer-jumping shortcut as the join engine.
-    """
-    from kgraph_framework_spark.operators.csr import build_csc_blocks, part_col
-
-    e = edges.select(
-        F.col("src_vertex").alias("src"), F.col("dst_vertex").alias("dst")
-    )
-    if symmetrize:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    # persist the symmetrized-distinct edge set: both the CSC pack and
-    # the vertex derivation consume it (without this the 50M-row
-    # symmetrize+distinct runs twice)
-    e = e.distinct().persist()
-    if n_parts is None:
-        # data-sized block count (operators/csr.auto_n_parts) — bounds
-        # per-block arrays at any corpus size; also materializes the
-        # persisted edge set before the pack
-        from kgraph_framework_spark.operators.csr import auto_n_parts
-
-        n_parts = auto_n_parts(spark, e.count())
-    csc = build_csc_blocks(
-        e.select(
-            F.col("src").alias("src_vertex"), F.col("dst").alias("dst_vertex")
-        ),
-        n_parts,
-    ).persist()
-
-    vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .repartition(n_parts, "vertex")
-        .persist()
-    )
-    labels0 = vertices.withColumn("label", F.col("vertex"))
-    iters = num_iters if num_iters is not None else max_iters
-    check = num_iters is None
-    if accelerate is None:
-        accelerate = num_iters is None
-
-    def scatter_min(key, blocks: pd.DataFrame, labels: pd.DataFrame) -> pd.DataFrame:
-        if blocks.empty or labels.empty:
-            return pd.DataFrame({"vertex": [], "partial": []}).astype(
-                {"vertex": "int64", "partial": "int64"}
-            )
-        lv = labels["vertex"].to_numpy(np.int64)
-        ll = labels["label"].to_numpy(np.int64)
-        o = np.argsort(lv, kind="stable")
-        lv, ll = lv[o], ll[o]
-        outs = []
-        for _, row in blocks.iterrows():
-            src_uniq = np.asarray(row["src_uniq"], dtype=np.int64)
-            codes = np.asarray(row["src_codes"], dtype=np.int64)
-            dst_ids = np.asarray(row["dst_ids"], dtype=np.int64)
-            indptr = np.asarray(row["dst_indptr"], dtype=np.int64)
-            # exact gather: every src in the block is a vertex in this
-            # co-partitioned label slice (same pmod on both sides)
-            svals = ll[np.searchsorted(lv, src_uniq)]
-            mins = np.minimum.reduceat(svals[codes], indptr[:-1])
-            outs.append(pd.DataFrame({"vertex": dst_ids, "partial": mins}))
-        return pd.concat(outs, ignore_index=True)
-
-    def step(labels: DataFrame, i: int):
-        lp = labels.select(
-            "vertex", "label", part_col(F.col("vertex"), n_parts).alias("part_id")
-        )
-        partials = (
-            csc.groupBy("part_id")
-            .cogroup(lp.groupBy("part_id"))
-            .applyInPandas(scatter_min, schema="vertex long, partial long")
-        )
-        nbr_min = partials.groupBy("vertex").agg(F.min("partial").alias("nbr_label"))
-        new = labels.select("vertex", "label").join(nbr_min, "vertex", "left").select(
-            "vertex",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
-        )
-        if accelerate:
-            hop = new.select(
-                F.col("vertex").alias("label"), F.col("label").alias("label2")
-            )
-            new = new.join(hop, "label", "left").select(
-                "vertex",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("label2"), F.col("label"))
-                ).alias("label"),
-            )
-        if check:
-            # prev is only read by the convergence count — fixed-round
-            # (oracle/bench) mode skips the join entirely
-            new = new.join(
-                labels.select("vertex", F.col("label").alias("prev")), "vertex"
-            )
-        return new, {}
-
-    def post(state: DataFrame, info: dict) -> dict:
-        changed = state.where(F.col("label") != F.col("prev")).count()
-        info["changed"] = int(changed)
-        return info
-
-    result = run_supersteps(
-        spark,
-        labels0,
-        step,
-        iters,
-        converged_fn=(lambda info: info.get("changed", 1) == 0) if check else None,
-        checkpoint_dir=checkpoint_dir,
-        resume=resume,
-        post_fn=post if check else None,
-    )
-    result.state = result.state.select("vertex", "label")
-    csc.unpersist()
-    vertices.unpersist()
-    e.unpersist()
     return result
 
 

@@ -10,21 +10,20 @@ neighbors never becomes the wedge pivot (cf. the reference's work-stealing
 scheduled). Counts are orientation-invariant, so the id-oriented DuckDB
 oracle agrees exactly.
 
-Three physical strategies, same exact counts:
+Two physical strategies, same exact counts, picked per call by
+``_auto_engine`` on the oriented wedge count (``engine="auto"``):
 
-* DEFAULT (round 4) — CSR-block intersection: the oriented adjacency is
-  packed ONCE into per-partition CSR rows (the operators/csr.py layout)
-  and the per-edge sorted-array intersection runs as a two-stage
-  cogroup gather (the nnd_blocked pattern): edges key to part(a) and
-  pick up their a-side adjacency from the co-grouped CSR block — each
-  distinct vertex's list shipped at most once per (p, q) cell, not once
-  per edge — then cells key to q = part(b), pick up the b-side lists
-  from block q, intersect, and emit PRE-AGGREGATED per-cell credit rows.
-  No per-edge nested-array replication ever crosses a shuffle.
-* adjacency-join (``engine="arrays"``) — endpoints' collect_list arrays
-  joined per edge; the round-3 default, kept for cross-checks.
-* wedge-join (``*_wedge`` variants) — plain equi-joins; kept for
-  cross-checks and benchmarks.
+* wedge-join — plain equi-joins that materialize every oriented wedge
+  and close it; the cheap choice on sparse-wedge (chain-shaped) graphs.
+* CSR-block intersection — the oriented adjacency is packed ONCE into
+  per-partition CSR rows (the operators/csr.py layout) and the per-edge
+  sorted-array intersection runs as a two-stage cogroup gather (the
+  nnd_blocked pattern): edges key to part(a) and pick up their a-side
+  adjacency from the co-grouped CSR block — each distinct vertex's list
+  shipped at most once per (p, q) cell, not once per edge — then cells
+  key to q = part(b), pick up the b-side lists from block q, intersect,
+  and emit PRE-AGGREGATED per-cell credit rows. No per-edge
+  nested-array replication ever crosses a shuffle.
 """
 
 from __future__ import annotations
@@ -74,75 +73,6 @@ def _triangle_rows(edges: DataFrame, oriented: DataFrame | None = None) -> DataF
     return tris.select(
         F.col("ta").alias("a"), F.col("tb").alias("b"), F.col("tc").alias("c")
     )
-
-
-def _common_neighbors(edges_with_adj: DataFrame) -> DataFrame:
-    """Arrow-batched sorted-array intersection per oriented edge.
-
-    The HERO-style alternative to wedge materialization (SURVEY §2.11,
-    PAPERS.md): instead of exploding every wedge (pivot row per
-    2-path) and closing it with a second big join, each oriented edge
-    (a,b) carries both endpoints' SORTED out-adjacency arrays and an
-    Arrow kernel intersects them — every common neighbor c closes the
-    triangle {a,b,c} exactly once (a→b, a→c, b→c by orientation
-    transitivity). Shuffle volume: two adjacency joins; the wedge table
-    (sum-of-squared-degrees rows) never exists.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def common(na, nb):
-        """Batch-vectorized intersection: flatten BOTH ragged sides into
-        (row, value, side) triples, one lexsort, and a value appearing
-        under the same row from both sides is common. Per-row Python is
-        gone — the batch costs one sort of total adjacency length, not
-        an interpreter call per edge."""
-        n = len(na)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        empty = np.empty(0, np.int64)
-        xa = [np.asarray(x, np.int64) if x is not None else empty
-              for x in na.to_numpy()]
-        xb = [np.asarray(y, np.int64) if y is not None else empty
-              for y in nb.to_numpy()]
-        la = np.fromiter((x.size for x in xa), np.int64, n)
-        lb = np.fromiter((y.size for y in xb), np.int64, n)
-        vals = np.concatenate(xa + xb) if (la.sum() + lb.sum()) else empty
-        rows = np.concatenate(
-            [np.repeat(np.arange(n, dtype=np.int64), la),
-             np.repeat(np.arange(n, dtype=np.int64), lb)]
-        )
-        o = np.lexsort((vals, rows))
-        ro, vo = rows[o], vals[o]
-        # each side is unique within itself, so a consecutive duplicate
-        # of (row, value) means one hit from each side
-        dup = (ro[1:] == ro[:-1]) & (vo[1:] == vo[:-1]) if ro.size else (
-            np.zeros(0, bool)
-        )
-        hit_rows, hit_vals = ro[1:][dup], vo[1:][dup]
-        counts = np.bincount(hit_rows, minlength=n)
-        return pd.Series(np.split(hit_vals, np.cumsum(counts)[:-1]))
-
-    return edges_with_adj.select(
-        "a", "b", common(F.col("na"), F.col("nb")).alias("cs")
-    )
-
-
-def _edge_commons(edges: DataFrame) -> DataFrame:
-    """(a, b, cs): every oriented edge with its common-neighbor list."""
-    o = _oriented(edges)
-    adj = o.groupBy(F.col("a").alias("v")).agg(
-        F.sort_array(F.collect_list("b")).alias("nbrs")
-    )
-    with_adj = (
-        o.join(adj.select(F.col("v").alias("a"), F.col("nbrs").alias("na")), "a")
-        .join(
-            adj.select(F.col("v").alias("b"), F.col("nbrs").alias("nb")),
-            "b",
-            "left",
-        )
-    )
-    return _common_neighbors(with_adj)
 
 
 ADJ_SCHEMA = "part_id int, src_ids array<long>, indptr array<long>, dst_ids array<long>"
@@ -323,8 +253,8 @@ def _csr_credits(
 
 #: auto-engine crossover: oriented wedge rows per edge. Below it the
 #: plain wedge join wins — measured at 25.1M transcript edges
-#: (W/E = 2.31): wedge 25.5/29.2 s vs CSR 42.1/49.5 s vs arrays
-#: 89.6/94.1 s, interleaved fresh-JVM pairs, identical counts
+#: (W/E = 2.31): wedge 25.5/29.2 s vs CSR 42.1/49.5 s, interleaved
+#: fresh-JVM pairs, identical counts
 #: (tools/triangles_engine_ab.py; BENCH.md round-5 section). Chain-ish
 #: graphs orient to tiny out-degrees, so the wedge table is ~2 rows/
 #: edge of 24 B — two narrow hash joins beat the packed-CSR machinery,
@@ -353,6 +283,11 @@ def _auto_engine(oriented: DataFrame) -> str:
     return "wedge" if w <= WEDGE_MAX_PER_EDGE * max(e, 1.0) else "csr"
 
 
+def _check_engine(engine: str) -> None:
+    if engine not in ("auto", "wedge", "csr"):
+        raise ValueError(f"unknown triangle engine {engine!r}")
+
+
 def count_triangles(
     edges: DataFrame, engine: str = "auto", n_parts: int | None = None
 ) -> int:
@@ -362,13 +297,15 @@ def count_triangles(
     Σ C(outdeg, 2) with one aggregation over the (persisted, reused)
     oriented graph and picks the wedge join when W/E <=
     WEDGE_MAX_PER_EDGE (the measured-cheap regime), the CSR cogroup
-    gather otherwise. All engines produce identical counts
-    (test-asserted; 25M-edge A/B in BENCH.md).
+    gather otherwise; ``"wedge"`` and ``"csr"`` force one engine. Both
+    engines produce identical counts (test-asserted; 25M-edge A/B in
+    BENCH.md).
 
     CSR engine: every triangle contributes exactly 3 credits (|C| to
     each endpoint of its closing edge, 1 to the common neighbor), so the
     count is sum(credits) / 3 — exact integer division by construction.
     """
+    _check_engine(engine)
     oriented = None
     if engine == "auto":
         oriented = _oriented(edges).persist()
@@ -376,65 +313,37 @@ def count_triangles(
     try:
         if engine == "wedge":
             return _triangle_rows(edges, oriented=oriented).count()
-        if engine == "csr":
-            row = _csr_credits(edges, n_parts, oriented=oriented).agg(
-                F.coalesce(F.sum("t"), F.lit(0)).alias("t")
-            ).first()
-            return int(row["t"]) // 3
-        row = (
-            _edge_commons(edges)
-            .agg(F.coalesce(F.sum(F.size("cs")), F.lit(0)).alias("t"))
-            .first()
-        )
-        return int(row["t"])
+        row = _csr_credits(edges, n_parts, oriented=oriented).agg(
+            F.coalesce(F.sum("t"), F.lit(0)).alias("t")
+        ).first()
+        return int(row["t"]) // 3
     finally:
         if oriented is not None:
             oriented.unpersist()
 
 
-def count_triangles_wedge(edges: DataFrame) -> int:
-    """Exact count via the wedge-join path (kept for cross-checks/bench)."""
-    return _triangle_rows(edges).count()
-
-
 def triangles_per_vertex(
-    edges: DataFrame, engine: str = "csr", n_parts: int | None = None
+    edges: DataFrame, engine: str = "auto", n_parts: int | None = None
 ) -> DataFrame:
     """(vertex, triangles) — number of triangles each vertex belongs to.
 
-    Per oriented edge (a,b) with common set C, credit |C| to a and b and
-    1 to every c ∈ C. Vertices in no triangle are omitted (join with the
-    vertex set and coalesce(0) if a dense output is needed).
-
-    ``engine="csr"`` (default): packed-adjacency cogroup gather — the
-    adjacency is built once as CSR blocks and reused by both gather
-    stages; credits are pre-aggregated per cell before the final sum.
-    ``engine="arrays"``: per-edge collect_list adjacency joins (the
-    round-3 path, value-identical, kept for cross-checks).
+    Vertices in no triangle are omitted (join with the vertex set and
+    coalesce(0) if a dense output is needed). ``engine`` picks as in
+    :func:`count_triangles`: the wedge join counts each vertex's
+    appearances in the triangle rows; the CSR gather credits |C| to
+    both endpoints of each oriented edge (a,b) with common set C and 1
+    to every c ∈ C, pre-aggregated per cell before the final sum.
     """
+    _check_engine(engine)
+    oriented = _oriented(edges).persist()
+    if engine == "auto":
+        engine = _auto_engine(oriented)
     if engine == "csr":
-        credits = _csr_credits(edges, n_parts)
+        credits = _csr_credits(edges, n_parts, oriented=oriented)
         return credits.groupBy("vertex").agg(
             F.sum("t").cast("long").alias("triangles")
         )
-    pe = _edge_commons(edges).where(F.size("cs") > 0)
-    credits = (
-        pe.select(F.col("a").alias("vertex"), F.size("cs").alias("t"))
-        .unionByName(
-            pe.select(F.col("b").alias("vertex"), F.size("cs").alias("t"))
-        )
-        .unionByName(
-            pe.select(F.explode("cs").alias("vertex"), F.lit(1).alias("t"))
-        )
-    )
-    return credits.groupBy("vertex").agg(
-        F.sum("t").cast("long").alias("triangles")
-    )
-
-
-def triangles_per_vertex_wedge(edges: DataFrame) -> DataFrame:
-    """Wedge-join formulation (kept for cross-checks and benching)."""
-    t = _triangle_rows(edges)
+    t = _triangle_rows(edges, oriented=oriented)
     allv = (
         t.select(F.col("a").alias("vertex"))
         .unionByName(t.select(F.col("b").alias("vertex")))

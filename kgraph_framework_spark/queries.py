@@ -118,16 +118,6 @@ def q_components(spark, sf_dir):
     return res.state.select("vertex", "label")
 
 
-def q_components_csr(spark, sf_dir):
-    from kgraph_framework_spark.plans.components import connected_components_csr
-
-    edges = union_graph(_transcripts(spark, sf_dir))
-    res = connected_components_csr(
-        spark, edges, num_iters=CC_ROUNDS, symmetrize=True
-    )
-    return res.state.select("vertex", "label")
-
-
 def q_labelprop(spark, sf_dir):
     edges = union_graph(_transcripts(spark, sf_dir))
     res = label_propagation(spark, edges, num_iters=LP_ROUNDS, symmetrize=True)
@@ -369,9 +359,6 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     # CLSH init -> NN-descent with same-bucket skip: rplsh driver (E3)
     "knn_graph_lsh": (q_knn_graph_lsh, _quality.lsh_nndescent_gate_sql()),
     "components_4round": (q_components, sql_oracle.cc_sql(CC_ROUNDS)),
-    # CSC-block gather/segment-min engine — integer labels, so the same
-    # unrolled SQL twin matches EXACTLY (no float-order caveat needed)
-    "components_csr_4round": (q_components_csr, sql_oracle.cc_sql(CC_ROUNDS)),
     "labelprop_2round": (q_labelprop, sql_oracle.labelprop_sql(LP_ROUNDS)),
     "tool_cousage": (q_tool_cousage, sql_oracle.tool_cousage_sql()),
     "triangles_tools": (q_triangles, sql_oracle.triangles_sql()),

@@ -78,62 +78,6 @@ class TestConnectedComponents:
         assert res.converged
 
 
-class TestCsrComponents:
-    def test_micro_matches_join_engine(self, spark):
-        from kgraph_framework_spark.plans.components import (
-            connected_components_csr,
-        )
-
-        res = connected_components_csr(spark, edges_df(spark, MICRO_EDGES))
-        exp = oracle.components_ref(MICRO_EDGES)
-        assert _labels(res.state) == exp
-        assert res.converged
-
-    def test_fixed_rounds_match_hashmin_ref(self, spark):
-        """num_iters mode must be PLAIN hash-min (no pointer jumping) so
-        the unrolled SQL twin matches round for round — same contract as
-        the join engine."""
-        from kgraph_framework_spark.plans.components import (
-            connected_components_csr,
-        )
-
-        sym = _sym(MICRO_EDGES)
-        res = connected_components_csr(
-            spark, edges_df(spark, MICRO_EDGES), num_iters=2, symmetrize=True
-        )
-        exp = oracle.hashmin_rounds_ref(sym, 2)
-        assert _labels(res.state) == exp
-
-    def test_long_chain_accelerated(self, spark):
-        from kgraph_framework_spark.plans.components import (
-            connected_components_csr,
-        )
-
-        chain = [(i, i + 1, 1.0) for i in range(63)]
-        res = connected_components_csr(
-            spark, edges_df(spark, chain), max_iters=30
-        )
-        got = _labels(res.state)
-        assert set(got.values()) == {0}
-        assert len(got) == 64
-        assert res.converged
-
-    def test_random_graph_matches_join_engine(self, spark):
-        from kgraph_framework_spark.plans.components import (
-            connected_components_csr,
-        )
-
-        rng = np.random.default_rng(11)
-        rows = [
-            (int(a), int(b), 1.0)
-            for a, b in rng.integers(0, 200, size=(120, 2))
-            if a != b
-        ]
-        csr = connected_components_csr(spark, edges_df(spark, rows))
-        hm = connected_components(spark, edges_df(spark, rows))
-        assert _labels(csr.state) == _labels(hm.state)
-
-
 class TestStarComponents:
     def test_micro_matches_hashmin(self, spark):
         from kgraph_framework_spark.plans.components import (
@@ -237,7 +181,6 @@ class TestTriangles:
             WEDGE_MAX_PER_EDGE,
             _auto_engine,
             _oriented,
-            count_triangles_wedge,
         )
 
         # path graph: oriented out-degrees ~1 -> W/E ~ 0 -> wedge
@@ -257,16 +200,11 @@ class TestTriangles:
         got_auto = count_triangles(e)  # default engine="auto"
         assert got_auto == 4060  # C(30, 3)
         assert got_auto == count_triangles(e, engine="csr")
-        assert got_auto == count_triangles_wedge(e)
+        assert got_auto == count_triangles(e, engine="wedge")
 
     def test_intersection_equals_wedge_path(self, spark):
-        """The sorted-adjacency Arrow-intersection default must agree
-        with the wedge-join formulation exactly."""
-        from kgraph_framework_spark.plans.triangles import (
-            count_triangles_wedge,
-            triangles_per_vertex_wedge,
-        )
-
+        """The sorted-adjacency CSR intersection must agree with the
+        wedge-join formulation exactly."""
         rng = np.random.default_rng(11)
         rows = []
         seen = set()
@@ -276,17 +214,17 @@ class TestTriangles:
                 seen.add((min(a, b), max(a, b)))
                 rows.append((a, b, 1.0))
         e = edges_df(spark, rows)
-        assert count_triangles(e) == count_triangles_wedge(e)
+        assert count_triangles(e) == count_triangles(e, engine="wedge")
         a = {r["vertex"]: r["triangles"]
-             for r in triangles_per_vertex(e).collect()}
+             for r in triangles_per_vertex(e, engine="csr").collect()}
         b = {r["vertex"]: r["triangles"]
-             for r in triangles_per_vertex_wedge(e).collect()}
+             for r in triangles_per_vertex(e, engine="wedge").collect()}
         assert a == b
 
-    def test_csr_engine_equals_arrays_engine(self, spark):
-        """The CSR cogroup-gather default must match the per-edge
-        adjacency-join path exactly, including across partition counts
-        (cells, packs, and pre-aggregated credits are internal)."""
+    def test_csr_engine_equals_ref_and_wedge(self, spark):
+        """The CSR cogroup gather must match the oracle and the wedge
+        join exactly, including across partition counts (cells, packs,
+        and pre-aggregated credits are internal)."""
         rng = np.random.default_rng(23)
         rows = []
         seen = set()
@@ -296,8 +234,10 @@ class TestTriangles:
                 seen.add((min(a, b), max(a, b)))
                 rows.append((a, b, 1.0))
         e = edges_df(spark, rows)
-        want = {r["vertex"]: r["triangles"]
-                for r in triangles_per_vertex(e, engine="arrays").collect()}
+        _, want = oracle.triangles_ref(rows)
+        wedge = {r["vertex"]: r["triangles"]
+                 for r in triangles_per_vertex(e, engine="wedge").collect()}
+        assert wedge == want
         for n_parts in (1, 3, 16):
             got = {
                 r["vertex"]: r["triangles"]
@@ -306,3 +246,27 @@ class TestTriangles:
                 ).collect()
             }
             assert got == want, f"n_parts={n_parts}"
+
+
+class TestUnknownEngineRaises:
+    """A misspelled engine or mode must raise, not quietly run some
+    other engine."""
+
+    @pytest.mark.parametrize(
+        "call", ["nn_descent", "count_triangles", "triangles_per_vertex"]
+    )
+    def test_unknown_engine_raises(self, spark, call):
+        from kgraph_framework_spark.operators.knn_graph import nn_descent
+
+        rng = np.random.default_rng(3)
+        with pytest.raises(ValueError, match="bogus"):
+            if call == "nn_descent":
+                emb = spark.createDataFrame(
+                    [(i, rng.random(4).tolist()) for i in range(20)],
+                    "vec_id long, embedding array<float>",
+                )
+                nn_descent(spark, emb, k=3, max_iters=1, mode="bogus")
+            elif call == "count_triangles":
+                count_triangles(edges_df(spark, TRI_EDGES), engine="bogus")
+            else:
+                triangles_per_vertex(edges_df(spark, TRI_EDGES), engine="bogus")

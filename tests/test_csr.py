@@ -45,27 +45,6 @@ class TestCsrBlocks:
         assert auto_n_parts(spark, TARGET_EDGES_PER_BLOCK * 100) >= 100
         assert auto_n_parts(spark, TARGET_EDGES_PER_BLOCK * 1000) >= 1000
 
-    def test_csc_blocks_roundtrip_and_partition(self, spark):
-        """CSC (dst-grouped) blocks: every edge appears exactly once, in
-        the block keyed by pmod(src) — the gather side's partitioning."""
-        import numpy as np
-
-        from kgraph_framework_spark.operators.csr import build_csc_blocks
-
-        e = edges_df(spark, MICRO_EDGES)
-        got = set()
-        for row in build_csc_blocks(e, n_parts=4).collect():
-            src_uniq = np.asarray(row["src_uniq"], dtype=np.int64)
-            codes = np.asarray(row["src_codes"], dtype=np.int64)
-            dst_ids = np.asarray(row["dst_ids"], dtype=np.int64)
-            indptr = np.asarray(row["dst_indptr"], dtype=np.int64)
-            srcs = src_uniq[codes]
-            dsts = np.repeat(dst_ids, np.diff(indptr))
-            for s, d in zip(srcs, dsts):
-                assert int(s) % 4 == row["part_id"]
-                got.add((int(s), int(d)))
-        assert got == {(s, d) for s, d, _ in MICRO_EDGES}
-
     def test_blocks_partition_by_src(self, spark):
         e = edges_df(spark, MICRO_EDGES)
         rows = build_csr_blocks(e, n_parts=4).collect()

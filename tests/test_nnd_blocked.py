@@ -530,8 +530,6 @@ class TestInt8Payload:
         with pytest.raises(ValueError):
             nn_descent(spark, emb, k=K, mode="fused", payload="fp16")
         with pytest.raises(ValueError):
-            nn_descent(spark, emb, k=K, mode="join", payload="fp16")
-        with pytest.raises(ValueError):
             nn_descent(spark, emb, k=K, mode="fused", payload="int8")
         with pytest.raises(ValueError):
             nn_descent(spark, emb, k=K, payload="int4")

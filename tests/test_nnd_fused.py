@@ -1,4 +1,5 @@
-"""Fused NN-descent kernels: SQL/numpy lockstep + parity with join path."""
+"""Fused NN-descent kernels: SQL/numpy lockstep + recall against the
+brute-force oracle."""
 
 from __future__ import annotations
 
@@ -83,17 +84,13 @@ class TestTopkPerSrc:
 
 
 class TestFusedVsJoin:
-    def test_both_paths_reach_floor_and_converge(self, spark, emb):
+    def test_fused_reaches_floor_and_converges(self, spark, emb):
         truth = knn_bruteforce_l2(emb, k=K).persist()
         gf, mf = nn_descent(spark, emb, k=K, max_iters=6)
-        gj, mj = nn_descent(spark, emb, k=K, max_iters=6, mode="join")
         rf = graph_recall(gf.select("src", "dst"), truth)
-        rj = graph_recall(gj.select("src", "dst"), truth)
         assert rf >= 0.9, f"fused recall {rf:.3f}"
-        assert rj >= 0.9, f"join recall {rj:.3f}"
-        # both converge (update rate decays)
+        # converges (update rate decays)
         assert mf[-1]["update_rate"] < mf[0]["update_rate"]
-        assert mj[-1]["update_rate"] < mj[0]["update_rate"]
         truth.unpersist()
 
     def test_fused_deterministic(self, spark, emb):

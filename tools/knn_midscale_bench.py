@@ -177,7 +177,7 @@ def main() -> None:
     ap.add_argument("--s", type=int, default=None)
     ap.add_argument("--dim", type=int, default=DIM)
     ap.add_argument(
-        "--mode", choices=("auto", "fused", "blocked", "join"),
+        "--mode", choices=("auto", "fused", "blocked"),
         default="auto",
         help="descent engine: 'blocked' forces the beyond-broadcast "
         "cogroup-gather path at any corpus size (the 100-TB shape)",

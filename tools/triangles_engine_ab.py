@@ -1,13 +1,11 @@
-"""Same-window A/B of the triangle-count engines (csr vs arrays vs
-wedge) at large edge counts — the measurement VERDICT r4 asked for
-(round-4 defaulted triangles to the CSR engine on sf0.1 evidence only,
-while the CC-over-CSC A/B proved packed layouts can LOSE for cheap
-integer kernels at 25M edges).
+"""Same-window A/B of the triangle-count engines (csr vs wedge) at
+large edge counts — the measurement that sets the auto pick's
+WEDGE_MAX_PER_EDGE crossover (plans/triangles.py).
 
-Protocol matches tools/cc_engine_ab.py: interleaved fresh-JVM runs on
-the identical deterministic corpus (union transcript graph at
-n_convs=400k -> ~25.1M edges), two passes per engine; the exact global
-triangle count is asserted identical across every run.
+Protocol: interleaved fresh-JVM runs on the identical deterministic
+corpus (union transcript graph at n_convs=400k -> ~25.1M edges), two
+passes per engine; the exact global triangle count is asserted
+identical across every run.
 
 Usage: python tools/triangles_engine_ab.py [n_convs] [timeout_sec]
 """
@@ -27,6 +25,7 @@ sys.path.insert(0, {repo!r})
 from kgraph_framework_spark.session import get_spark
 from kgraph_framework_spark.sources.transcripts import synthesize_transcripts
 from kgraph_framework_spark.operators.edges import union_graph
+from kgraph_framework_spark.plans.triangles import count_triangles
 
 engine = sys.argv[1]; n_convs = int(sys.argv[2])
 spark = get_spark(f"tri-ab-{{engine}}", cores=32, shuffle_partitions=64)
@@ -35,12 +34,7 @@ t = synthesize_transcripts(spark, n_convs=n_convs, seed=42)
 edges = union_graph(t).persist()
 n_edges = edges.count()
 t0 = time.monotonic()
-if engine == "wedge":
-    from kgraph_framework_spark.plans.triangles import count_triangles_wedge
-    count = count_triangles_wedge(edges)
-else:
-    from kgraph_framework_spark.plans.triangles import count_triangles
-    count = count_triangles(edges, engine=engine)
+count = count_triangles(edges, engine=engine)
 wall = time.monotonic() - t0
 print(json.dumps({{
     "engine": engine, "n_edges": n_edges,
@@ -69,7 +63,7 @@ def main():
     results = []
     # interleaved: one full sweep, then the second, so each engine sees
     # both halves of the window
-    for engine in ("csr", "arrays", "wedge", "csr", "arrays", "wedge"):
+    for engine in ("csr", "wedge", "csr", "wedge"):
         r = run(engine, n_convs, timeout)
         print(json.dumps(r), flush=True)
         results.append(r)
@@ -82,7 +76,7 @@ def main():
         "triangles": counts.pop(),
         "walls": {
             e: [r["wall_sec"] for r in results if r["engine"] == e]
-            for e in ("csr", "arrays", "wedge")
+            for e in ("csr", "wedge")
         },
         "count_identical": True,
     }
