@@ -51,6 +51,18 @@ Superstep dataflow (B merge blocks, G embedding blocks):
             entry/fresh counts (so convergence needs one agg, not two
             counts).
 
+Placement: every packed exchange groups by a small dense integer key
+(blk in [0, B), g in [0, G), g2 in [0, gh*r)), so each grouping side is
+placed with ``repartitionById(n_keys, key)`` (PySpark >= 4.1): key k on
+partition k, one key per task. Spark's murmur3 HashPartitioning
+collides on so few keys (g2 = 0..3 lands in partitions 7, 3, 6, 3 of
+8, so one task scores two cells while other cores idle), and AQE
+coalesces the byte-small but CPU-heavy exchanges into a single task;
+neither happens to an id-placed exchange. The static cogroup sides are
+cached placed the same way, and a cogroup of two id-placed sides with
+equal key counts needs no exchange over the cache. Both sides must be
+placed: against a hash-placed fresh side Spark re-shuffles the cache.
+
 Scale accounting per superstep (N vertices, sample S, pool L, dim d):
 candidate volume is the reference's N*O(S^2) either way. The gathered-
 vector duplication is bounded by min(pairs, touched-rows x G) x 4d — it
@@ -482,6 +494,7 @@ def pack_pool(pool: DataFrame, n_blocks: int) -> DataFrame:
             blk_col(F.col("src"), n_blocks).alias("blk"),
             "src", "dst", "dist", "is_new",
         )
+        .repartitionById(n_blocks, "blk")
         .groupBy("blk")
         .applyInPandas(fn, POOL_P_SCHEMA)
     )
@@ -927,7 +940,11 @@ def score_pairs_blocked(
 
     Default layout is flat (cells = the g_blocks emb packing itself);
     pass ``emb_cells``/``gh``/``r`` to score on a gather grid instead
-    (see grid_dims) — results are identical either way."""
+    (see grid_dims) — results are identical either way. Both gathers
+    place their fresh side by key id (module docstring, "Placement"); a
+    static side cached as ``repartitionById(g_blocks, "g")`` (emb_blocks)
+    and ``repartitionById(gh * r, "g")`` (emb_cells) is then read
+    without an exchange, any other one is re-shuffled."""
     if emb_cells is None:
         emb_cells, gh, r = emb_blocks, g_blocks, 1
 
@@ -953,16 +970,19 @@ def score_pairs_blocked(
         pairs.select(
             blk_col(F.col("a"), g_blocks).alias("g"), "a", "b"
         )
+        .repartitionById(g_blocks, "g")
         .groupBy("g")
         .applyInPandas(to_packed, PAIR_P_SCHEMA)
     )
     packs = (
-        keyed.groupBy("g")
+        keyed.repartitionById(g_blocks, "g")
+        .groupBy("g")
         .cogroup(emb_blocks.groupBy("g"))
         .applyInPandas(_gather1_kernel(gh, r, row_bytes), PACK_P_SCHEMA)
     )
     return (
-        packs.groupBy("g2")
+        packs.repartitionById(gh * r, "g2")
+        .groupBy("g2")
         .cogroup(emb_cells.groupBy("g"))
         .applyInPandas(unpack_scored, "a long, b long, dist double")
     )
@@ -1031,18 +1051,18 @@ def nn_descent_blocked(
     gh, r = grid or grid_dims(n, dim, dp, block_bytes)
 
     # The corpus-derived cogroup sides never change between rounds, so
-    # cache them ALREADY HASH-PARTITIONED on the cogroup key: the cached
-    # InMemoryTableScan reports HashPartitioning(g, p_static), which
-    # satisfies the cogroup's ClusteredDistribution, so EnsureRequirements
-    # elides the per-round exchange that used to re-ship the sharded
-    # matrix (~corpus bytes) and the r-replicated grid cells (~r*corpus
-    # bytes) EVERY round — the two static byte-edges the round-4 stage
-    # attribution measured at ~1.5 GB/round on a 256 MB corpus. Only the
-    # fresh pair/pack sides shuffle per round now.
-    p_static = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # cache them ALREADY PLACED by key id: block g on partition g of G,
+    # cell g on partition g of gh*r. Every round places its fresh pair
+    # and pack sides the same way, so the two sides of each gather are
+    # co-partitioned and EnsureRequirements adds no exchange over the
+    # cache. That elides the per-round re-ship of the sharded matrix
+    # (~corpus bytes) and of the r-replicated grid cells (~r*corpus
+    # bytes) — the two static byte-edges the round-4 stage attribution
+    # measured at ~1.5 GB/round on a 256 MB corpus — and gives every
+    # block and cell its own task (module docstring, "Placement").
     emb_blocks = (
         build_emb_blocks(emb, G, payload, row_bytes)
-        .repartition(p_static, "g")
+        .repartitionById(G, "g")
         .persist()
     )
     emb_blocks.count()
@@ -1051,7 +1071,7 @@ def nn_descent_blocked(
     else:
         emb_cells = (
             replicate_emb_cells(build_emb_blocks(emb, gh, payload, row_bytes), r)
-            .repartition(p_static, "g")
+            .repartitionById(gh * r, "g")
             .persist()
         )
         emb_cells.count()
@@ -1091,9 +1111,13 @@ def nn_descent_blocked(
             .persist()
         )
         clears = samples.mapInPandas(_clears_packed, CAND_P_SCHEMA)
-        upairs = samples.groupBy("blk").applyInPandas(
-            _pairgen_packed_kernel(s, seed + 3 * it + 2, G, excl_bc),
-            PAIR_P_SCHEMA,
+        upairs = (
+            samples.repartitionById(B, "blk")
+            .groupBy("blk")
+            .applyInPandas(
+                _pairgen_packed_kernel(s, seed + 3 * it + 2, G, excl_bc),
+                PAIR_P_SCHEMA,
+            )
         )
         nb = F.lit(None).cast("binary")
         pairs_in = upairs.select("g", "pk", nb.alias("t_ids"),
@@ -1109,7 +1133,8 @@ def nn_descent_blocked(
                 tau_lo.select("g", nb.alias("pk"), "t_ids", "t_tau")
             )
         packs = (
-            pairs_in.groupBy("g")
+            pairs_in.repartitionById(G, "g")
+            .groupBy("g")
             .cogroup(emb_blocks.groupBy("g"))
             .applyInPandas(_gather1_kernel(gh, r, row_bytes), PACK_P_SCHEMA)
         )
@@ -1126,14 +1151,16 @@ def nn_descent_blocked(
                 )
             )
         scored_cands = (
-            packs.groupBy("g2")
+            packs.repartitionById(gh * r, "g2")
+            .groupBy("g2")
             .cogroup(emb_cells.groupBy("g"))
             .applyInPandas(_gather2_kernel(l, B), CAND_P_SCHEMA)
         )
         cands = scored_cands.unionByName(clears)
         merged = (
-            pool_p.groupBy("blk")
-            .cogroup(cands.groupBy("blk"))
+            pool_p.repartitionById(B, "blk")
+            .groupBy("blk")
+            .cogroup(cands.repartitionById(B, "blk").groupBy("blk"))
             .applyInPandas(_merge_packed_kernel(l), MERGE_P_SCHEMA)
         )
         new_pool = truncate_state(spark, merged)
@@ -1188,7 +1215,7 @@ def nn_descent_blocked(
         band = min(l, 2 * final_k)
         exact_blocks = (
             build_emb_blocks(emb, G, "fp32", row_bytes)
-            .repartition(p_static, "g")
+            .repartitionById(G, "g")
             .persist()
         )
         exact = score_pairs_blocked(

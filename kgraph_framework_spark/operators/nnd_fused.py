@@ -64,13 +64,25 @@ MERGE_SCHEMA = "src long, dst long, dist double, is_new boolean, fresh boolean"
 #: unchanged; the guard bounds driver memory.
 EXCL_COLLECT_CAP = 5_000_000
 
-_SCORE_CHUNK = 1 << 14  # pairs per einsum chunk — small on purpose: this
-# size keeps every scratch buffer (2 x f32 gathers + 2 x f64 upcasts)
-# within the allocator's reuse cache. Fresh multi-hundred-MB numpy
-# allocations are first-touch page-faulted by the kernel at ~2 s / 64 MB
-# on this class of VM (measured; the same pathology membw_probe
-# quantifies), which made large-chunk scoring ~20x slower than the
-# arithmetic itself.
+#: scratch bytes per float64 buffer in l2_gathered's einsum chunk. The
+#: chunk holds four buffers (2 x f32 gathers + 2 x f64 upcasts), ~1.5 MiB
+#: in total at this budget, so they stay resident in a core's L2 cache
+#: and are reused across chunks instead of streamed through memory. A
+#: fixed pair count would grow them with dim: 16,384 pairs makes each
+#: float64 buffer 128 MB at 1,024-d and scores ~3x slower (BENCH.md
+#: "Round 6: gather-2 scoring"). Preallocating them once per call, not
+#: per chunk, still matters: fresh multi-hundred-MB numpy allocations
+#: are first-touch page-faulted by the kernel at ~2 s / 64 MB on the
+#: virtualized hosts measured (the pathology membw_probe quantifies),
+#: which made fresh-buffer scoring ~20x slower than the arithmetic.
+_SCORE_CHUNK_BYTES = 512 << 10
+
+
+def _score_chunk(dim: int) -> int:
+    """Pairs per l2_gathered chunk: the byte budget over one float64 row,
+    clamped to [16, 16384] pairs so tiny dims still amortize the
+    per-chunk numpy calls and huge dims still batch."""
+    return min(max(_SCORE_CHUNK_BYTES // (8 * max(dim, 1)), 16), 1 << 14)
 
 
 def l2_gathered(
@@ -97,7 +109,7 @@ def l2_gathered(
     if n == 0:
         return out
     dim = Xa.shape[1]
-    ch = min(_SCORE_CHUNK, n)
+    ch = min(_score_chunk(dim), n)
     ga = np.empty((ch, dim), Xa.dtype)
     gb = np.empty((ch, dim), Xb.dtype)
     da = np.empty((ch, dim), np.float64)
@@ -145,7 +157,10 @@ def auto_n_blocks(default_parallelism: int, n_vecs: int, l: int) -> int:
     fills and the per-key load evens out. Measured (BENCH.md n_blocks
     A/B, 500k x 128-d, both interleaved pairs): rounds-wall 162/209 +
     150/241 s at B=32 vs 136/155 + 95/99 s at B=128 — up to 1.6x; the
-    same direction on the FUSED path at 50k (fused_floor_ab)."""
+    same direction on the FUSED path at 50k (fused_floor_ab). The
+    blocked loop no longer hashes its blocks into partitions: it places
+    block ``b`` on partition ``b`` (repartitionById), so there the floor
+    only sizes the blocks; the fused loop still hash-partitions."""
     need = -(-(n_vecs * l) // POOL_ROWS_PER_BLOCK)  # ceil div
     floor = (
         4 * default_parallelism

@@ -27,7 +27,7 @@ from kgraph_framework_spark.operators.nnd_blocked import (
     replicate_emb_cells,
     score_pairs_blocked,
 )
-from kgraph_framework_spark.operators.nnd_fused import auto_n_blocks
+from kgraph_framework_spark.operators.nnd_fused import auto_n_blocks, blk_col
 
 SF_TINY = "/root/testdata/sf0.001"
 K = 10
@@ -538,14 +538,17 @@ class TestInt8Payload:
 class TestStaticSideExchangeReuse:
     """The corpus-derived cogroup sides (emb blocks / grid cells) are
     static across descent rounds; nn_descent_blocked caches them ALREADY
-    hash-partitioned on the cogroup key so EnsureRequirements elides
-    their per-round exchange (the ~corpus-bytes and ~r*corpus-bytes
-    shuffle edges the round-4 stage attribution measured)."""
+    placed by key id (block g on partition g, repartitionById) and
+    places every fresh side the same way, so EnsureRequirements elides
+    the static side's per-round exchange (the ~corpus-bytes and
+    ~r*corpus-bytes shuffle edges the round-4 stage attribution
+    measured)."""
 
     @staticmethod
     def _cached_scan_exchanges(df) -> int:
-        """ENSURE_REQUIREMENTS exchanges that re-shuffle the cached static
-        side (an InMemoryTableScan within 2 plan lines below)."""
+        """ENSURE_REQUIREMENTS exchanges, of any partitioning, that
+        re-shuffle the cached static side (an InMemoryTableScan within 2
+        plan lines below)."""
         import re
 
         s = df._jdf.queryExecution().executedPlan().toString()
@@ -554,7 +557,7 @@ class TestStaticSideExchangeReuse:
         lines = s.split("== Initial Plan ==")[0].splitlines()
         n = 0
         for i, ln in enumerate(lines):
-            if "ENSURE_REQUIREMENTS" in ln and "Exchange hashpartitioning" in ln:
+            if "ENSURE_REQUIREMENTS" in ln and "Exchange " in ln:
                 below = "\n".join(lines[i + 1 : i + 3])
                 if "InMemoryTableScan" in below:
                     n += 1
@@ -562,17 +565,16 @@ class TestStaticSideExchangeReuse:
 
     def test_prepartitioned_side_elides_exchange(self, spark, emb):
         """Same results, and the cached block side is consumed WITHOUT a
-        runtime re-shuffle when cached post-repartition on g (what
-        nn_descent_blocked now does for emb_blocks and emb_cells)."""
+        runtime re-shuffle when cached placed by key id (what
+        nn_descent_blocked does for emb_blocks and emb_cells)."""
         ids = [r["vec_id"] for r in emb.select("vec_id").limit(12).collect()]
         pairs = spark.createDataFrame(
             [(int(a), int(b)) for a in ids[:6] for b in ids[6:]],
             "a long, b long",
         )
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         plain = build_emb_blocks(emb, 3).persist()
         plain.count()
-        part = build_emb_blocks(emb, 3).repartition(p, "g").persist()
+        part = build_emb_blocks(emb, 3).repartitionById(3, "g").persist()
         part.count()
 
         out_plain = score_pairs_blocked(pairs, plain, 3)
@@ -591,3 +593,41 @@ class TestStaticSideExchangeReuse:
         # so NO exchange may touch it.
         assert n_plain >= 1, n_plain
         assert n_part == 0, n_part
+
+
+class TestGather2Placement:
+    """Gather-2 places grid cell g2 on partition g2: one cell per task.
+    Under murmur3 HashPartitioning the four cells of a (2, 2) grid land
+    in partitions 7, 3, 6, 3 of 8, and AQE may coalesce those further,
+    so one task scored several cells."""
+
+    def test_one_cell_per_partition(self, spark, emb):
+        ids = [r_["vec_id"] for r_ in emb.select("vec_id").limit(24).collect()]
+        pairs = spark.createDataFrame(
+            [(int(a), int(b)) for a in ids[:12] for b in ids[12:]],
+            "a long, b long",
+        )
+        gh, r = 2, 2
+        blocks = build_emb_blocks(emb, 3).repartitionById(3, "g").persist()
+        cells = (
+            replicate_emb_cells(build_emb_blocks(emb, gh), r)
+            .repartitionById(gh * r, "g")
+            .persist()
+        )
+        out = score_pairs_blocked(
+            pairs, blocks, 3, emb_cells=cells, gh=gh, r=r
+        ).select(
+            # the cell _gather1_kernel routes pair (lo=a, hi=b) to
+            (blk_col(F.col("b"), gh) * r + blk_col(F.col("a"), r))
+            .alias("cell"),
+            F.spark_partition_id().alias("pid"),
+        )
+        placed = {(r_["cell"], r_["pid"]) for r_ in out.collect()}
+        blocks.unpersist()
+        cells.unpersist()
+
+        assert {c for c, _ in placed} == set(range(gh * r))
+        per_pid: dict[int, set] = {}
+        for c, pid in placed:
+            per_pid.setdefault(pid, set()).add(c)
+        assert all(len(cs) == 1 for cs in per_pid.values()), per_pid

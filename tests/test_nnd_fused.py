@@ -17,7 +17,9 @@ from kgraph_framework_spark.operators.knn_graph import (
 from kgraph_framework_spark.operators.nnd_fused import (
     _blk_np,
     _hash_np,
+    _score_chunk,
     blk_col,
+    l2_gathered,
     topk_per_src,
 )
 
@@ -168,3 +170,33 @@ class TestRevPushGate:
         assert pairs[None][0].tolist() == pairs[seed][0].tolist()
         assert pairs[None][1].tolist() == pairs[seed][1].tolist()
         assert pairs[None][0].size > 0
+
+
+class TestL2GatheredChunks:
+    """l2_gathered scores in cache-sized chunks whose pair count depends
+    on dim; every output must equal the one-shot einsum bit for bit on
+    both sides of each chunk edge."""
+
+    def test_chunk_sizes(self):
+        assert _score_chunk(1) == 1 << 14  # ceiling
+        assert _score_chunk(64) == 1024
+        assert _score_chunk(1024) == 64
+        assert _score_chunk(4096) == 16
+        assert _score_chunk(8192) == 16  # floor
+
+    @pytest.mark.parametrize("dim", [1, 64, 1024, 4096])
+    def test_bit_identical_across_chunk_edges(self, dim):
+        rng = np.random.default_rng(dim)
+        ch = _score_chunk(dim)
+        ids_a = np.arange(40, dtype=np.int64) * 3 + 7
+        ids_b = np.arange(50, dtype=np.int64) * 2 + 1
+        Xa = rng.standard_normal((ids_a.size, dim)).astype(np.float32)
+        Xb = rng.standard_normal((ids_b.size, dim)).astype(np.float32)
+        for n in sorted({0, 1, ch - 1, ch, ch + 1, 3 * ch + 5}):
+            ia = rng.integers(0, ids_a.size, n)
+            ib = rng.integers(0, ids_b.size, n)
+            got = l2_gathered(Xa, ids_a, ids_a[ia], Xb, ids_b, ids_b[ib])
+            d = Xa[ia].astype(np.float64) - Xb[ib].astype(np.float64)
+            want = np.einsum("ij,ij->i", d, d)
+            assert got.dtype == np.float64 and got.shape == (n,)
+            assert got.tobytes() == want.tobytes(), (dim, n)
