@@ -26,7 +26,8 @@ superstep is then a cogrouped gather-scatter:
     scores partitioned by the same part fn  ->  cogroup(csr, scores)
       -> per-block numpy gather (scores of src_ids), scatter
          (bincount over the build-time dst codes), PRE-AGGREGATED per block
-      -> one shuffle of (dst, partial) rows, groupBy(dst).sum
+      -> one shuffle of (dst, partial) rows together with every vertex's
+         own row, groupBy(vertex).sum (the superstep's one message exchange)
 
 The per-block pre-aggregation is the map-side combiner: a block emits
 each distinct dst ONCE, so the superstep shuffle volume is bounded by
@@ -158,43 +159,29 @@ def pagerank_csr(
     checkpoint_dir: str | None = None,
     resume: bool = True,
 ):
-    """PageRank over CSR blocks — same semantics as plans/pagerank.py
-    (same update rule, init, dangling handling; scores allclose 1e-12,
-    differing only by float summation order), with the per-superstep
-    scatter running inside Arrow-batched numpy instead of a row join.
+    """PageRank over CSR blocks — the superstep loop of plans/pagerank.py
+    (``run_pagerank``: same update rule, init, dangling handling; scores
+    allclose 1e-12, differing only by float summation order), with the
+    per-superstep scatter running inside Arrow-batched numpy instead of
+    a row join.
     """
-    from kgraph_framework_spark.plans.pregel import PregelResult, run_supersteps
+    from kgraph_framework_spark.plans.pagerank import run_pagerank, vertex_table
 
     if n_parts is None:
         # data-sized block count: bounds per-block arrays at any corpus
         # size (one count() action at build time, amortized over the loop)
         n_parts = auto_n_parts(spark, edges.count())
     csr = build_csr_blocks(edges, n_parts).persist()
-
-    e = edges.select(
-        F.col("src_vertex").alias("src"), F.col("dst_vertex").alias("dst")
+    vertices = vertex_table(
+        edges.select(F.col("src_vertex").alias("src"), F.col("dst_vertex").alias("dst")),
+        n_parts,
     )
-    vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-        .repartition(n_parts, "vertex")
-        .persist()
-    )
-    n = vertices.count()
-    srcs = e.select(F.col("src").alias("vertex")).distinct()
-    dangling = vertices.join(srcs, "vertex", "left_anti").persist()
-    has_dangling = dangling.limit(1).count() > 0
-    iters = num_iters if num_iters is not None else max_iters
-    check = num_iters is None and tol is not None
-
-    ranks0 = vertices.withColumn("score", F.lit(1.0 / n))
 
     def scatter(key, blocks: pd.DataFrame, scores: pd.DataFrame) -> pd.DataFrame:
         """Per-partition gather-scatter with block-local pre-aggregation."""
         if blocks.empty or scores.empty:
-            return pd.DataFrame({"vertex": [], "partial": []}).astype(
-                {"vertex": "int64", "partial": "float64"}
+            return pd.DataFrame({"vertex": [], "c": []}).astype(
+                {"vertex": "int64", "c": "float64"}
             )
         # sorted-gather for the score lookup: every src in this block is
         # present in the co-partitioned score rows (srcs ⊆ vertices and
@@ -213,64 +200,22 @@ def pagerank_csr(
             s = ss[np.searchsorted(sv, src_ids)]
             contrib = np.repeat(s, np.diff(indptr)) * wn
             partial = np.bincount(codes, weights=contrib, minlength=du.size)
-            outs.append(pd.DataFrame({"vertex": du, "partial": partial}))
+            outs.append(pd.DataFrame({"vertex": du, "c": partial}))
         return pd.concat(outs, ignore_index=True)
 
-    def step(ranks: DataFrame, i: int):
+    def messages(ranks: DataFrame) -> DataFrame:
         rp = ranks.select(
             "vertex", "score", part_col(F.col("vertex"), n_parts).alias("part_id")
         )
-        partials = (
+        return (
             csr.groupBy("part_id")
             .cogroup(rp.groupBy("part_id"))
-            .applyInPandas(scatter, schema="vertex long, partial double")
+            .applyInPandas(scatter, schema="vertex long, c double")
         )
-        contribs = partials.groupBy("vertex").agg(
-            F.sum("partial").alias("contrib")
-        )
-        new = vertices.join(contribs, "vertex", "left")
-        if has_dangling:
-            dm_df = (
-                ranks.join(dangling, "vertex", "left_semi")
-                .agg(F.coalesce(F.sum("score"), F.lit(0.0)).alias("_dm"))
-            )
-            new = new.crossJoin(dm_df)
-        else:
-            new = new.withColumn("_dm", F.lit(0.0))
-        score = (
-            F.lit((1.0 - damping) / n)
-            + F.lit(damping)
-            * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("_dm") / n)
-        ).alias("score")
-        if check:
-            # prev feeds only the convergence delta; fixed-round mode
-            # (oracle/bench/scaling) never reads it — skip the join
-            new = new.join(
-                ranks.select("vertex", F.col("score").alias("prev")), "vertex"
-            )
-            new = new.select("vertex", score, "prev")
-        else:
-            new = new.select("vertex", score)
-        return new, {"n_vertices": n}
 
-    def post(state: DataFrame, info: dict) -> dict:
-        if check:
-            delta = state.agg(F.max(F.abs(F.col("score") - F.col("prev")))).first()[0]
-            info["max_delta"] = float(delta)
-        return info
-
-    def converged(info: dict) -> bool:
-        if num_iters is not None:
-            return False
-        return tol is not None and info.get("max_delta", 1.0) < tol
-
-    result = run_supersteps(
-        spark, ranks0, step, iters, converged_fn=converged,
-        checkpoint_dir=checkpoint_dir, resume=resume,
-        post_fn=post if check else None,
+    result = run_pagerank(
+        spark, vertices, messages, damping, max_iters, tol, num_iters,
+        checkpoint_dir, resume,
     )
-    result.state = result.state.select("vertex", "score")
     csr.unpersist()
-    vertices.unpersist()
-    dangling.unpersist()
     return result

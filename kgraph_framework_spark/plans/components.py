@@ -8,12 +8,13 @@ Converges in O(diameter) rounds; convergence = zero label changes.
 
 Scale notes: identical join/groupBy shape to PageRank — the symmetrized
 edge table is repartitioned by src and cached once; each superstep is one
-co-partitioned join + one min-aggregation with map-side combine. For
-pathological long-chain graphs the large-star/small-star algorithm
-(Kiveris et al., "Connected Components in MapReduce and Beyond") halves
-rounds; planned as a follow-up optimization — transcript affiliation
-graphs are shallow (tools/roles are hubs), so hash-min converges in a
-handful of rounds.
+scatter join + one min-aggregation (map-side combine) over the messages
+and every vertex's own row, with the changed count observed in the
+materializing job. For pathological long-chain graphs the
+large-star/small-star algorithm (Kiveris et al., "Connected Components in
+MapReduce and Beyond") halves rounds; planned as a follow-up
+optimization — transcript affiliation graphs are shallow (tools/roles are
+hubs), so hash-min converges in a handful of rounds.
 """
 
 from __future__ import annotations
@@ -99,40 +100,39 @@ def connected_components_star(
         .persist()
     )
 
-    prev_chk: list = [None]
+    # convergence = the edge multiset repeats the previous superstep's
+    # (order-free checksum, observed in the materializing job)
+    prev: dict = {}
 
     def step(e: DataFrame, i: int):
-        return _small_star(_large_star(e)), {}
+        # reduce operands below 2^31 BEFORE multiplying: vertex ids are
+        # 63-bit hashes and ANSI mode faults on long overflow; decimal
+        # accumulator: the 2^61-bounded terms overflow a LONG sum under
+        # ANSI mode on big edge sets
+        term = F.pmod(
+            F.pmod(F.col("u"), F.lit(1 << 31)) * F.lit(1_099_511_627)
+            + F.pmod(F.col("v"), F.lit(1 << 31)),
+            F.lit(1 << 61),
+        ).cast("decimal(38,0)")
+        return _small_star(_large_star(e)), {
+            "n_edges": F.count(F.lit(1)),
+            "checksum": F.coalesce(F.sum(term), F.lit(0)).cast("string"),
+        }
 
-    def post(state: DataFrame, info: dict) -> dict:
-        row = state.agg(
-            F.count(F.lit(1)).alias("n"),
-            # reduce operands below 2^31 BEFORE multiplying: vertex ids
-            # are 63-bit hashes and ANSI mode faults on long overflow
-            # decimal accumulator: the 2^61-bounded terms overflow a
-            # LONG sum under ANSI mode on big edge sets
-            F.sum(
-                F.pmod(
-                    F.pmod(F.col("u"), F.lit(1 << 31)) * F.lit(1_099_511_627)
-                    + F.pmod(F.col("v"), F.lit(1 << 31)),
-                    F.lit(1 << 61),
-                ).cast("decimal(38,0)")
-            ).alias("h"),
-        ).first()
-        chk = (row["n"], row["h"])
-        info["changed"] = chk != prev_chk[0]
-        prev_chk[0] = chk
-        return info
+    def converged(info: dict) -> bool:
+        return (info["n_edges"], info["checksum"]) == (
+            prev.get("n_edges"), prev.get("checksum")
+        )
 
     result = run_supersteps(
         spark,
         e0,
         step,
         max_iters,
-        converged_fn=lambda info: not info.get("changed", True),
+        converged_fn=converged,
         checkpoint_dir=checkpoint_dir,
         resume=resume,
-        post_fn=post,
+        prev_info=prev,
     )
     star = result.state.select(
         F.greatest("u", "v").alias("child"), F.least("u", "v").alias("root")
@@ -203,16 +203,21 @@ def connected_components(
         accelerate = num_iters is None
 
     def step(labels: DataFrame, i: int):
-        nbr_min = (
-            e.join(labels.select(F.col("vertex").alias("src"), "label"), "src")
-            .groupBy(F.col("dst").alias("vertex"))
-            .agg(F.min("label").alias("nbr_label"))
+        # one message exchange: the neighbours' labels and the vertex's
+        # own row (its label, and as ``prev`` for the convergence count)
+        # meet in one groupBy(vertex) — min over both is the hash-min
+        msgs = e.join(labels.select(F.col("vertex").alias("src"), "label"), "src")
+        own = labels.select(
+            "vertex", "label", *([F.col("label").alias("prev")] if check else [])
         )
-        new = labels.select("vertex", "label").join(nbr_min, "vertex", "left").select(
-            "vertex",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
+        new = (
+            msgs.select(F.col("dst").alias("vertex"), "label")
+            .unionByName(own, allowMissingColumns=True)
+            .groupBy("vertex")
+            .agg(
+                F.min("label").alias("label"),
+                *([F.max("prev").alias("prev")] if check else []),
+            )
         )
         if accelerate:
             # pointer jumping: follow the label one hop in label space.
@@ -226,29 +231,20 @@ def connected_components(
                 F.least(
                     F.col("label"), F.coalesce(F.col("label2"), F.col("label"))
                 ).alias("label"),
+                *(["prev"] if check else []),
             )
-        if check:
-            # prev feeds only the convergence count; fixed-round mode
-            # (oracle/bench) never reads it — skip the join
-            new = new.join(
-                labels.select("vertex", F.col("label").alias("prev")), "vertex"
-            )
-        return new, {}
-
-    def post(state: DataFrame, info: dict) -> dict:
-        changed = state.where(F.col("label") != F.col("prev")).count()
-        info["changed"] = int(changed)
-        return info
+        if not check:
+            return new, {}
+        return new, {"changed": F.count_if(F.col("label") != F.col("prev"))}
 
     result = run_supersteps(
         spark,
         labels0,
         step,
         iters,
-        converged_fn=(lambda info: info.get("changed", 1) == 0) if check else None,
+        converged_fn=(lambda info: info["changed"] == 0) if check else None,
         checkpoint_dir=checkpoint_dir,
         resume=resume,
-        post_fn=post if check else None,
     )
     result.state = result.state.select("vertex", "label")
     e.unpersist()

@@ -70,19 +70,31 @@ def label_propagation(
         # weight, ties broken by SMALLEST label — identical semantics
         # to the window version and the DuckDB twin (weights are
         # integer counts, so double sums are exact and order-free).
+        # The vertex's own row joins the second aggregation (null
+        # ordering, so max_by skips it) and keeps its label when no
+        # neighbour votes — no join back to the label state.
         votes = (
             e.join(labels.withColumnRenamed("vertex", "src"), "src")
             .groupBy(F.col("dst").alias("vertex"), "label")
             .agg(F.sum("w").alias("wvote"))
         )
-        best = votes.groupBy("vertex").agg(
-            F.max_by(
-                "label", F.struct(F.col("wvote"), (-F.col("label")).alias("nl"))
-            ).alias("best_label")
-        )
-        new = labels.join(best, "vertex", "left").select(
-            "vertex",
-            F.coalesce(F.col("best_label"), F.col("label")).alias("label"),
+        own = labels.select("vertex", F.col("label").alias("own"))
+        new = (
+            votes.unionByName(own, allowMissingColumns=True)
+            .groupBy("vertex")
+            .agg(
+                F.max_by(
+                    "label",
+                    F.when(
+                        F.col("wvote").isNotNull(),
+                        F.struct(F.col("wvote"), (-F.col("label")).alias("nl")),
+                    ),
+                ).alias("best_label"),
+                F.max("own").alias("own"),
+            )
+            .select(
+                "vertex", F.coalesce(F.col("best_label"), F.col("own")).alias("label")
+            )
         )
         return new, {}
 

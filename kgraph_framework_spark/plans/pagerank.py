@@ -12,11 +12,19 @@ vertices with no out-edges. Convergence: max |Δscore| < tol.
 
 Scale design (10^12 edges):
 * the edge table is normalized ONCE (weight / out-degree folded into a
-  ``wnorm`` column), hash-repartitioned by src_vertex and cached — every
-  superstep's join then reuses that exchange instead of reshuffling the
-  big side per iteration;
-* the per-superstep aggregation is groupBy(dst).sum — Spark performs
-  map-side partial aggregation, the analog of per-partition combiners;
+  ``wnorm`` column), hash-repartitioned by src_vertex and cached. Below
+  ``spark.sql.autoBroadcastJoinThreshold`` the planner broadcasts that
+  cache into each superstep's scatter join (the state's statistics are
+  reset by the runner, so it is never the broadcast side); above it the
+  join is a sort-merge join whose edge side is the cached layout and
+  whose rank side is shuffled by src;
+* each superstep has ONE message exchange: the messages and every
+  vertex's own row (its previous score and dangling flag) meet in one
+  groupBy(vertex) — Spark performs map-side partial aggregation, the
+  analog of per-partition combiners — so no join goes back to the
+  vertex table or the previous state;
+* the dangling mass is a Pregel aggregator: observed on superstep t's
+  output inside its materializing job, applied as a scalar in t + 1;
 * plan lineage is truncated per superstep (localCheckpoint) via the pregel
   runner, and parquet checkpoints + lineage manifest make the loop
   resumable mid-iteration (north rule).
@@ -63,40 +71,97 @@ def pagerank_auto(
     return pagerank(spark, edges, partitions=partitions, **kw)
 
 
-def _prepare(spark: SparkSession, edges: DataFrame, partitions: int | None):
-    e = edges.select(
-        F.col("src_vertex").alias("src"),
-        F.col("dst_vertex").alias("dst"),
-        F.col("weight").cast("double").alias("w"),
-    )
-    wsum = e.groupBy("src").agg(F.sum("w").alias("wsum"))
-    enorm = e.join(wsum, "src").select(
-        "src", "dst", (F.col("w") / F.col("wsum")).alias("wnorm")
-    )
-    # pre-partition AND pre-sort the big (edge) side on the join key so
-    # every superstep's sort-merge join reuses this layout (InMemoryScan
-    # preserves outputPartitioning/Ordering): no per-superstep exchange or
-    # sort of the edges — only the (smaller) ranks side shuffles.
-    if partitions is None:
-        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    enorm = (
-        enorm.repartition(partitions, "src").sortWithinPartitions("src").persist()
-    )
+def vertex_table(e: DataFrame, partitions: int) -> DataFrame:
+    """(vertex, dangling) over every endpoint of ``e`` (src, dst), persisted.
 
-    vertices = (
-        e.select(F.col("src").alias("vertex"))
-        .unionByName(e.select(F.col("dst").alias("vertex")))
-        .distinct()
+    A vertex is dangling when it has no out-edge; its score is spread
+    over all vertices as the dangling mass.
+    """
+    return (
+        e.select(F.col("src").alias("vertex"), F.lit(False).alias("dangling"))
+        .unionByName(
+            e.select(F.col("dst").alias("vertex"), F.lit(True).alias("dangling"))
+        )
+        .groupBy("vertex")
+        .agg(F.min("dangling").alias("dangling"))
         .repartition(partitions, "vertex")
-        .sortWithinPartitions("vertex")
         .persist()
     )
 
-    # vertices with no outgoing edge contribute "dangling mass"
-    dangling = vertices.join(
-        wsum.select(F.col("src").alias("vertex")), "vertex", "left_anti"
-    ).persist()
-    return enorm, vertices, dangling
+
+#: exact type for the observed dangling-mass sum: the runner merges the
+#: per-task partial sums in task-completion order, and a double sum would
+#: make that order (and so a resumed run) visible in the last bits
+_MASS_TYPE = "decimal(38,30)"
+
+
+def run_pagerank(
+    spark: SparkSession,
+    vertices: DataFrame,
+    messages,
+    damping: float,
+    max_iters: int,
+    tol: float | None,
+    num_iters: int | None,
+    checkpoint_dir: str | None,
+    resume: bool,
+) -> PregelResult:
+    """The PageRank superstep loop shared by both engines.
+
+    ``vertices`` is a persisted :func:`vertex_table` (unpersisted here);
+    ``messages(ranks)`` returns the engine's (vertex, c) contributions,
+    lazily. ``num_iters`` forces an exact superstep count; otherwise the
+    loop stops once max|Δscore| < tol.
+    """
+    n, n_dangling = vertices.agg(
+        F.count(F.lit(1)), F.count_if(F.col("dangling"))
+    ).first()
+    iters = num_iters if num_iters is not None else max_iters
+    check = num_iters is None and tol is not None
+    # superstep i reads the dangling mass observed on superstep i - 1's
+    # output; the initial state's is seeded here
+    prev = {"dangling_mass": n_dangling / n}
+
+    def step(ranks: DataFrame, i: int):
+        own = ranks.select(
+            "vertex", "dangling", *([F.col("score").alias("prev")] if check else [])
+        )
+        agg = (
+            messages(ranks)
+            .unionByName(own, allowMissingColumns=True)
+            .groupBy("vertex")
+            .agg(
+                F.sum("c").alias("contrib"),
+                F.max("dangling").alias("dangling"),
+                *([F.max("prev").alias("prev")] if check else []),
+            )
+        )
+        score = (
+            F.lit((1.0 - damping) / n)
+            + F.lit(damping)
+            * (
+                F.coalesce(F.col("contrib"), F.lit(0.0))
+                + F.lit(prev["dangling_mass"]) / n
+            )
+        ).alias("score")
+        new = agg.select("vertex", score, "dangling", *(["prev"] if check else []))
+        mass = F.sum(F.when(F.col("dangling"), F.col("score").cast(_MASS_TYPE)))
+        info = {
+            "n_vertices": n,
+            "dangling_mass": F.coalesce(mass, F.lit(0)).cast("double"),
+        }
+        if check:
+            info["max_delta"] = F.max(F.abs(F.col("score") - F.col("prev")))
+        return new, info
+
+    result = run_supersteps(
+        spark, vertices.withColumn("score", F.lit(1.0 / n)), step, iters,
+        converged_fn=lambda info: check and info["max_delta"] < tol,
+        checkpoint_dir=checkpoint_dir, resume=resume, prev_info=prev,
+    )
+    result.state = result.state.select("vertex", "score")
+    vertices.unpersist()
+    return result
 
 
 def pagerank(
@@ -114,7 +179,7 @@ def pagerank(
     """Run PageRank; returns PregelResult whose state is (vertex, score).
 
     ``num_iters`` forces an exact superstep count (oracle-comparison mode,
-    no convergence action); otherwise iterate until max|Δ| < tol.
+    no convergence scalar); otherwise iterate until max|Δ| < tol.
 
     ``hub_threshold`` enables explicit skew handling: source vertices with
     out-degree above it are HUBS — their score rows are broadcast and
@@ -122,93 +187,53 @@ def pagerank(
     receives a hub's full adjacency (the north-star "broadcast of
     high-degree frontiers"; AQE skew-join splitting covers the residual).
     The hub-side partial contributions re-aggregate in the same
-    groupBy(dst) — structurally the salting split-merge (the hub's rows
+    groupBy(vertex) — structurally the salting split-merge (the hub's rows
     are spread across ALL map partitions = maximal salt). Results are
     IDENTICAL to the plain path (physical change only, up to float
     summation order).
     """
-    enorm, vertices, dangling = _prepare(spark, edges, partitions)
+    e = edges.select(
+        F.col("src_vertex").alias("src"),
+        F.col("dst_vertex").alias("dst"),
+        F.col("weight").cast("double").alias("w"),
+    )
+    wsum = e.groupBy("src").agg(F.sum("w").alias("wsum"))
+    enorm = e.join(wsum, "src").select(
+        "src", "dst", (F.col("w") / F.col("wsum")).alias("wnorm")
+    )
+    # pre-partition AND pre-sort the big (edge) side on the join key: in
+    # the sort-merge regime the scatter join reads this layout instead of
+    # exchanging and sorting the edges every superstep
+    if partitions is None:
+        partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    enorm = (
+        enorm.repartition(partitions, "src").sortWithinPartitions("src").persist()
+    )
+    vertices = vertex_table(e, partitions)
     hub_enorm = None
     if hub_threshold is not None:
         deg = enorm.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         hub_ids = deg.where(F.col("deg") > hub_threshold).select("src").persist()
         hub_enorm = enorm.join(F.broadcast(hub_ids), "src", "left_semi").persist()
         enorm = enorm.join(F.broadcast(hub_ids), "src", "left_anti").persist()
-    n = vertices.count()
-    has_dangling = dangling.limit(1).count() > 0
-    iters = num_iters if num_iters is not None else max_iters
-    check = num_iters is None and tol is not None
 
-    ranks0 = vertices.withColumn("score", F.lit(1.0 / n))
-
-    def step(ranks: DataFrame, i: int):
-        """One superstep, fully lazy (no driver actions).
-
-        The dangling mass is folded into the plan as a 1-row aggregate
-        cross-joined in (Spark broadcasts it), and the previous score is
-        carried as a ``prev`` column so the convergence delta is a narrow
-        aggregate over the materialized state in ``post`` — together this
-        keeps the runner at ONE job per superstep instead of three.
-        """
-        scatter = enorm.join(
-            ranks.select(F.col("vertex").alias("src"), "score"), "src"
-        )
+    def messages(ranks: DataFrame) -> DataFrame:
+        src_scores = ranks.select(F.col("vertex").alias("src"), "score")
+        scatter = enorm.join(src_scores, "src")
         if hub_enorm is not None:
-            hub_ranks = ranks.select(F.col("vertex").alias("src"), "score").join(
-                F.broadcast(hub_ids.select("src")), "src", "left_semi"
-            )
+            hub_ranks = src_scores.join(F.broadcast(hub_ids), "src", "left_semi")
             scatter = scatter.unionByName(
                 hub_enorm.join(F.broadcast(hub_ranks), "src")
             )
-        contribs = (
-            scatter.groupBy(F.col("dst").alias("vertex"))
-            .agg(F.sum(F.col("score") * F.col("wnorm")).alias("contrib"))
+        return scatter.select(
+            F.col("dst").alias("vertex"), (F.col("score") * F.col("wnorm")).alias("c")
         )
-        new = vertices.join(contribs, "vertex", "left")
-        if has_dangling:
-            dm_df = (
-                ranks.join(dangling, "vertex", "left_semi")
-                .agg(F.coalesce(F.sum("score"), F.lit(0.0)).alias("_dm"))
-            )
-            new = new.crossJoin(dm_df)
-        else:
-            new = new.withColumn("_dm", F.lit(0.0))
-        score = (
-            F.lit((1.0 - damping) / n)
-            + F.lit(damping)
-            * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("_dm") / n)
-        ).alias("score")
-        if check:
-            # prev feeds only the convergence delta; fixed-round mode
-            # (oracle/bench/scaling) never reads it — skip the join
-            new = new.join(
-                ranks.select("vertex", F.col("score").alias("prev")), "vertex"
-            )
-            new = new.select("vertex", score, "prev")
-        else:
-            new = new.select("vertex", score)
-        return new, {"n_vertices": n}
 
-    def post(state: DataFrame, info: dict) -> dict:
-        if check:
-            delta = state.agg(F.max(F.abs(F.col("score") - F.col("prev")))).first()[0]
-            info["max_delta"] = float(delta)
-        return info
-
-    def converged(info: dict) -> bool:
-        if num_iters is not None:
-            return False
-        return tol is not None and info.get("max_delta", 1.0) < tol
-
-    result = run_supersteps(
-        spark, ranks0, step, iters, converged_fn=converged,
-        checkpoint_dir=checkpoint_dir, resume=resume,
-        post_fn=post if check else None,
+    result = run_pagerank(
+        spark, vertices, messages, damping, max_iters, tol, num_iters,
+        checkpoint_dir, resume,
     )
-    result.state = result.state.select("vertex", "score")
     enorm.unpersist()
-    vertices.unpersist()
-    dangling.unpersist()
     if hub_enorm is not None:
         hub_enorm.unpersist()
         hub_ids.unpersist()

@@ -25,7 +25,8 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -50,8 +51,8 @@ def truncate_state(spark: SparkSession, df: DataFrame) -> DataFrame:
 
     ``localCheckpoint`` truncates the RDD lineage but the resulting
     LogicalRDD *keeps the pre-checkpoint plan's size-in-bytes estimate*.
-    A superstep that references the state more than once (convergence
-    prev-column join, dangling-mass cross join, pointer-jump self-join)
+    A superstep that references the state more than once (the scatter
+    side plus the vertices' own rows, the pointer-jump self-join)
     then SQUARES that estimate every iteration — by superstep ~40 the
     BigInt sizeInBytes has thousands of digits and Catalyst's stats
     visitor burns minutes per plan in Toom-Cook multiplication (observed
@@ -190,24 +191,31 @@ def run_supersteps(
     converged_fn: Callable[[dict], bool] | None = None,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    post_fn: Callable[[DataFrame, dict], dict] | None = None,
+    prev_info: dict | None = None,
 ) -> PregelResult:
     """Run ``state = step_fn(state, i)`` until convergence or max_iters.
 
-    ``step_fn`` returns (new_state, info) and must NOT trigger actions —
-    the runner materializes the state with a single job per superstep
-    (non-eager localCheckpoint + count). ``post_fn`` (optional) runs AFTER
-    materialization over the cached state to finalize ``info`` with cheap
-    aggregates (convergence deltas etc. — the idiom is to carry the
-    previous value as an extra column so the delta is a narrow agg over
-    cached partitions, not a re-join). ``info`` feeds ``converged_fn`` and
-    is persisted as the superstep's metrics/lineage record. When
-    ``checkpoint_dir`` is set, each completed superstep writes the state as
-    parquet plus a manifest line; on restart with ``resume=True`` the run
-    continues from the last committed superstep.
+    ``step_fn`` returns (new_state, info) and must NOT trigger actions:
+    each superstep runs exactly ONE Spark action, the localCheckpoint
+    that materializes the new state. Every ``Column`` in ``info`` is a
+    global aggregate over the new state (convergence delta, changed
+    count, checksum); the runner observes it with the row count on top of
+    the step's output, inside that job, and replaces it by its value.
+    ``info`` feeds ``converged_fn`` and is persisted as the superstep's
+    metrics/lineage record.
+
+    ``prev_info`` carries Pregel aggregators into the next superstep:
+    after superstep i the runner replaces its content with i's resolved
+    ``info``; before the first superstep it holds what the caller seeded.
+    When ``checkpoint_dir`` is set, each completed superstep writes the
+    state as parquet plus a manifest line; on restart with ``resume=True``
+    the run continues from the last committed superstep, with
+    ``prev_info`` seeded from that superstep's record.
     """
     metrics: list[SuperstepMetrics] = []
     start_step = 0
+    if prev_info is None:
+        prev_info = {}
 
     if checkpoint_dir:
         os.makedirs(checkpoint_dir, exist_ok=True)
@@ -217,6 +225,7 @@ def run_supersteps(
                 last = rec["superstep"]
                 state = spark.read.parquet(_ckpt_path(checkpoint_dir, last))
                 start_step = last + 1
+                prev_info.update(rec)
                 if start_step >= max_iters or rec.get("converged"):
                     # run already complete — don't enter the loop (which
                     # would produce empty metrics and over-count steps)
@@ -232,8 +241,13 @@ def run_supersteps(
     for step in range(start_step, max_iters):
         t0 = time.monotonic()
         new_state, info = step_fn(state, step)
-        new_state = truncate_state(spark, new_state)
-        rows = new_state.count()  # cheap: counts the cached partitions
+        obs = Observation()
+        aggs = [c.alias(k) for k, c in info.items() if isinstance(c, Column)]
+        new_state = truncate_state(
+            spark, new_state.observe(obs, F.count(F.lit(1)).alias("_rows"), *aggs)
+        )
+        info = {**info, **obs.get}
+        rows = info.pop("_rows")
         release_state(state)  # prev superstep's cache no longer reachable
         # time-throttled shuffle reclaim: long convergence runs write GBs
         # of dead shuffle per superstep; reclaim at a superstep BOUNDARY
@@ -244,11 +258,11 @@ def run_supersteps(
         if time.monotonic() - last_reclaim >= RECLAIM_EVERY_SEC:
             reclaim_shuffles(spark, settle_sec=0.2)
             last_reclaim = time.monotonic()
-        if post_fn is not None:
-            info = post_fn(new_state, info)
         dt = time.monotonic() - t0
         converged = bool(converged_fn(info)) if converged_fn else False
         metrics.append(SuperstepMetrics(step, dt, rows, converged, info))
+        prev_info.clear()
+        prev_info.update(info)
 
         if checkpoint_dir:
             path = _ckpt_path(checkpoint_dir, step)

@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import os
 
+from kgraph_framework_spark.operators.csr import pagerank_csr
 from kgraph_framework_spark.plans.components import connected_components
 from kgraph_framework_spark.plans.pagerank import pagerank
 from kgraph_framework_spark.plans.pregel import latest_checkpoint
@@ -45,6 +46,41 @@ class TestResume:
         assert _scores(resumed.state) == _scores(full.state)
         # metrics only cover the resumed tail
         assert [m.superstep for m in resumed.metrics] == [3, 4, 5]
+
+    def test_pagerank_csr_resume_identical(self, spark, tmp_path):
+        ckpt = str(tmp_path / "csr")
+        full = pagerank_csr(spark, edges_df(spark, MICRO_EDGES), num_iters=6, n_parts=4)
+        pagerank_csr(
+            spark, edges_df(spark, MICRO_EDGES), num_iters=3, n_parts=4,
+            checkpoint_dir=ckpt,
+        )
+        assert latest_checkpoint(ckpt) == 2
+        resumed = pagerank_csr(
+            spark, edges_df(spark, MICRO_EDGES), num_iters=6, n_parts=4,
+            checkpoint_dir=ckpt,
+        )
+        assert _scores(resumed.state) == _scores(full.state)
+        assert [m.superstep for m in resumed.metrics] == [3, 4, 5]
+
+    def test_pagerank_tol_resume_identical(self, spark, tmp_path):
+        """Convergence mode: the resumed tail must apply the dangling mass
+        (vertex 9 is dangling) observed before the kill and stop at the
+        same superstep as the uninterrupted run."""
+        ckpt = str(tmp_path / "tol")
+        full = pagerank(spark, edges_df(spark, MICRO_EDGES), tol=1e-3, max_iters=30)
+        assert full.converged and full.supersteps > 4
+        pagerank(
+            spark, edges_df(spark, MICRO_EDGES), tol=1e-3, max_iters=4,
+            checkpoint_dir=ckpt,
+        )
+        assert latest_checkpoint(ckpt) == 3
+        resumed = pagerank(
+            spark, edges_df(spark, MICRO_EDGES), tol=1e-3, max_iters=30,
+            checkpoint_dir=ckpt,
+        )
+        assert resumed.converged
+        assert resumed.supersteps == full.supersteps
+        assert _scores(resumed.state) == _scores(full.state)
 
     def test_cc_resume_identical(self, spark, tmp_path):
         ckpt = str(tmp_path / "cc")
