@@ -28,12 +28,15 @@ the unseeded-rand hazard of SURVEY.md §4; ours is reproducible). All
 pool orderings tie-break by (dist, id) exactly like the reference's
 Neighbor ordering (include/commom/neighbor.h:24-34).
 
-Scale design: ``nn_descent`` runs each superstep as three grouped Arrow
-kernels (sample, pairgen, merge). Below the measured crossover the
-corpus matrix is broadcast and scored in place (operators/nnd_fused);
-above it the matrix is sharded into cogrouped blocks (operators/
-nnd_blocked). Both cap reverse lists at S, the skew bound (J8 in
-SURVEY.md §2.3).
+Scale design: ``nn_descent`` runs one superstep loop at every corpus
+size (operators/nnd_blocked.nn_descent_blocked): packed per-block rows
+through sample, pairgen, score and merge kernels, one Spark action per
+round. Only the scoring stage depends on size. Below the measured
+crossover the corpus matrix is broadcast and pairgen scores in place
+against it (operators/nnd_fused); above it the matrix is sharded into
+cogrouped blocks and scored by a two-stage gather. Both forms build the
+same graph bit for bit, and both cap reverse lists at S, the skew bound
+(J8 in SURVEY.md §2.3).
 """
 
 from __future__ import annotations
@@ -146,10 +149,10 @@ def random_init(emb: DataFrame, k: int, seed: int = 42) -> DataFrame:
 #: matrix is sharded into cogrouped blocks instead (operators/
 #: nnd_blocked) — same kernels, no single-node requirement.
 SCORE_BROADCAST_BYTES = 512 << 20
-#: measured fused-vs-blocked crossover for ``nn_descent(mode="auto")``
-#: (BENCH.md round 4): at 50k x 64-d (12.8 MB matrix) the broadcast-
-#: fused loop wins 1.26x, at 200k x 64-d (51.2 MB) the cogroup-blocked
-#: loop wins 2.2x — every Python worker holds (and first unpickles) its
+#: measured broadcast-vs-gather crossover for ``nn_descent(mode="auto")``
+#: (BENCH.md round 4, measured when each scoring form had its own loop):
+#: at 50k x 64-d (12.8 MB matrix) broadcast scoring wins 1.26x, at
+#: 200k x 64-d (51.2 MB) the cogroup gather wins 2.2x — every Python worker holds (and first unpickles) its
 #: own copy of the broadcast, so the per-round cost grows with matrix
 #: size while the blocked path ships each touched vector once per cell.
 #: A later 2x2 interleaved A/B at the first midpoint (50k x 128-d,
@@ -177,8 +180,8 @@ def broadcast_matrix(
     shuffling per candidate pair each round. Distances computed from it
     are bit-identical to the join path (same float32 storage, same
     float64 arithmetic). ``min_vecs`` keeps pure-scoring callers on the
-    join path below the measured crossover; the fused NN-descent loop
-    passes ``min_vecs=1`` because its kernels score in place (the fixed
+    join path below the measured crossover; nn_descent passes
+    ``min_vecs=1`` because its pairgen kernel scores in place (the fixed
     mapInPandas-stage cost that motivated the floor doesn't apply).
     """
     row = emb.select(
@@ -287,18 +290,19 @@ def nn_descent(
     distances are already in the pool, so the result is unchanged —
     only redundant distance evaluations are dropped.
 
-    ``mode``: "auto" runs the FUSED superstep loop (operators/nnd_fused —
-    3 grouped Arrow kernels per round) while the corpus matrix is under
-    the measured fused/blocked crossover (AUTO_FUSED_MAX_BYTES, ~16 MB),
-    else the BLOCKED loop (operators/nnd_blocked — same kernels, matrix
-    sharded into cogrouped blocks, no broadcast: the 100-TB shape, and
-    the faster one on big corpora); "blocked" forces the blocked loop
-    at any size;
-    "fused" asserts the broadcast fits. Any other value raises
-    ValueError.
+    ``mode`` picks how candidates are scored; the descent loop is the
+    same (operators/nnd_blocked.nn_descent_blocked). "auto" scores
+    against a broadcast of the corpus matrix while it is under the
+    measured crossover (AUTO_FUSED_MAX_BYTES, ~16 MB), else by the
+    cogroup gather over sharded matrix blocks (no broadcast: the 100-TB
+    shape, and the faster one on big corpora). "fused" forces broadcast
+    scoring and raises ValueError when the matrix exceeds the broadcast
+    cap; "blocked" forces the gather at any size. Any other value
+    raises ValueError.
 
-    ``payload`` is "fp32" (exact) or "int8" (blocked loop only; forces
-    it so the knob is never silently ignored). int8 ships
+    ``payload`` is "fp32" (exact) or "int8" (gather scoring only; forces
+    it so the knob is never silently ignored, and raises with
+    ``mode="fused"``). int8 ships
     per-vector-scaled int8 codes — ~4x fewer bytes on the dominant
     matrix shuffle edges (~0.4%-of-max rounding during the descent) —
     and finishes with an EXACT fp32 re-rank of each pool's top
@@ -309,29 +313,31 @@ def nn_descent(
     (BENCH.md wire-payload A/Bs).
 
     ``min_recall`` enables the reference's OWN convergence criterion
-    (src/index_graph.cpp:172-179): each round, the sampled recall of
-    the pool vs exact control truth is evaluated, and the loop stops
-    once it reaches the threshold (the reference uses 0.99) — so
-    like-for-like runs can terminate exactly like the reference
-    instead of on a fixed round count; the round that stops on it
-    carries ``recall_stop=True``. ``control`` supplies the
-    precomputed truth (src, dst) — compute it with
+    (src/index_graph.cpp:172-179): after each round the sampled recall
+    of the pool vs exact control truth is evaluated, and the loop stops
+    once ``recall >= min_recall`` (the reference uses 0.99); the round
+    that stops on it carries ``recall_stop=True``. The reference checks
+    strict ``recall > threshold`` BEFORE each round, the init graph
+    included, so two edge cases differ: a run here always does at least
+    one round, and a recall exactly at the threshold stops here but not
+    there. Otherwise both stop after the same round. ``control``
+    supplies the precomputed truth (src, dst) — compute it with
     :func:`control_truth` BEFORE any build timer, as the reference
     loads its ground-truth file outside the timed build; left None,
     nn_descent computes it here (one N x n_control broadcast scan).
     Per-round metrics gain ``recall`` and ``recall_eval_sec`` rows
     (eval time kept separate, like the reference's per-iter walls).
     The update-rate stop remains active; pass ``min_update_rate=0``
-    for pure reference semantics. An empty control set raises
+    for recall-only stopping. An empty control set raises
     ValueError rather than silently running to ``max_iters``.
 
-    ``block_bytes`` (blocked loop only; default
+    ``block_bytes`` (gather scoring only; default
     nnd_blocked.EMB_BLOCK_BYTES) sets the embedding-block size — the
     per-task memory vs gather-duplication knob. High-dim corpora trade
     here: per-round gather bytes ~ (corpus_bytes / block_bytes) x
     corpus, so larger blocks cut single-box scratch-disk quadratically
     at higher per-task working memory (BENCH.md high-dim section).
-    Passing it to a run that takes the fused loop warns.
+    Passing it to a run that scores against the broadcast warns.
     """
     if mode not in ("auto", "fused", "blocked"):
         raise ValueError(f"unknown mode {mode!r}")
@@ -339,15 +345,14 @@ def nn_descent(
         raise ValueError(f"unknown payload {payload!r}")
     if payload != "fp32":
         if mode == "fused":
-            raise ValueError(f"payload={payload!r} requires the blocked loop")
+            raise ValueError(f"payload={payload!r} needs gather scoring")
         mode = "blocked"
     if l is None:
         l = 3 * k
     if s is None:
         s = max(3, (3 * k) // 2)
     emb = emb.select("vec_id", "embedding").persist()
-    control_pdf = None
-    control_df = None
+    control_bc = None
     control_total = 0
     if min_recall is not None:
         truth = control if control is not None else control_truth(
@@ -360,55 +365,6 @@ def nn_descent(
             raise ValueError(
                 "min_recall is set but the control set is empty"
             )
-        control_df = spark.createDataFrame(control_pdf, "src long, dst long")
-    bc = None
-    if mode == "fused":
-        bc = broadcast_matrix(emb, min_vecs=1)
-    elif mode == "auto":
-        # measured crossover, not the broadcast CAP: past ~16 MB the
-        # blocked loop beats the fused one even though the matrix
-        # would still broadcast (see AUTO_FUSED_MAX_BYTES)
-        bc = broadcast_matrix(
-            emb, limit_bytes=AUTO_FUSED_MAX_BYTES, min_vecs=1
-        )
-    if mode == "fused" and bc is None:
-        raise ValueError("mode='fused' but corpus exceeds broadcast cap")
-    if bc is not None:
-        from kgraph_framework_spark.operators.nnd_fused import (
-            auto_n_blocks,
-            nn_descent_fused,
-            topk_per_src,
-        )
-
-        if block_bytes is not None:
-            import warnings
-
-            warnings.warn(
-                "block_bytes only sizes the blocked loop's embedding "
-                "blocks; this run takes the fused loop and ignores it",
-                stacklevel=2,
-            )
-        pool, metrics = nn_descent_fused(
-            spark, emb, bc, k=k, l=l, s=s, max_iters=max_iters,
-            min_update_rate=min_update_rate, seed=seed, init=init,
-            exclude_pairs=exclude_pairs,
-            min_recall=min_recall, control_df=control_df,
-            control_total=control_total,
-        )
-        B = auto_n_blocks(
-            spark.sparkContext.defaultParallelism, len(bc.value[0]), l
-        )
-        graph = topk_per_src(pool.select("src", "dst", "dist"), k, B)
-        bc.unpersist()
-        emb.unpersist()
-        return graph, metrics
-
-    # beyond the broadcast cap (or forced): same kernels, matrix sharded
-    # into cogrouped blocks — no single-node requirement
-    from kgraph_framework_spark.operators.nnd_blocked import nn_descent_blocked
-
-    control_bc = None
-    if control_pdf is not None:
         from kgraph_framework_spark.operators.nnd_fused import _pack2
 
         s_arr = control_pdf["src"].to_numpy(np.int64)
@@ -416,21 +372,45 @@ def nn_descent(
         control_bc = spark.sparkContext.broadcast(
             (np.unique(s_arr), np.sort(_pack2(s_arr, d_arr)))
         )
-    # final_k: the packed merge already leaves each block's pool per-src
-    # sorted and deduped, so the blocked loop cuts top-k in place while
-    # unpacking — no extra topk shuffle
+    bc = None
+    if mode == "fused":
+        bc = broadcast_matrix(emb, min_vecs=1)
+        if bc is None:
+            raise ValueError("mode='fused' but corpus exceeds broadcast cap")
+    elif mode == "auto":
+        # measured crossover, not the broadcast CAP: past ~16 MB gather
+        # scoring beats broadcast scoring even though the matrix would
+        # still broadcast (see AUTO_FUSED_MAX_BYTES)
+        bc = broadcast_matrix(
+            emb, limit_bytes=AUTO_FUSED_MAX_BYTES, min_vecs=1
+        )
     bb = {}
     if block_bytes is not None:
+        if bc is not None:
+            import warnings
+
+            warnings.warn(
+                "block_bytes only sizes the gather path's embedding "
+                "blocks; this run scores against the broadcast matrix "
+                "and ignores it",
+                stacklevel=2,
+            )
         bb["block_bytes"] = block_bytes
+    from kgraph_framework_spark.operators.nnd_blocked import nn_descent_blocked
+
+    # final_k: the packed merge already leaves each block's pool per-src
+    # sorted and deduped, so the loop cuts top-k in place while
+    # unpacking — no extra topk shuffle
     graph, metrics = nn_descent_blocked(
         spark, emb, k=k, l=l, s=s, max_iters=max_iters,
         min_update_rate=min_update_rate, seed=seed, init=init,
         exclude_pairs=exclude_pairs, final_k=k, payload=payload,
         min_recall=min_recall, control_bc=control_bc,
-        control_total=control_total, **bb,
+        control_total=control_total, bc=bc, **bb,
     )
-    if control_bc is not None:
-        control_bc.unpersist()
+    for handle in (bc, control_bc):
+        if handle is not None:
+            handle.unpersist()
     emb.unpersist()
     return graph, metrics
 

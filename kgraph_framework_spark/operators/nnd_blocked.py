@@ -1,15 +1,14 @@
-"""Blocked NN-descent: the fused kernels beyond the broadcast cap,
-with a PACKED-BUFFER dataflow between them.
+"""The NN-descent superstep loop, over a PACKED-BUFFER dataflow.
 
 Reference behavior to match: the NN-descent kernel has ONE shape at any
 corpus size that fits RAM (/root/reference/src/index_graph.cpp:139-190)
-— there is no algorithmic cliff between "small" and "large" N. Round 3's
-fused path (operators/nnd_fused.py) reproduced its throughput but only
-while the whole float32 matrix fits a driver broadcast; this module runs
-the SAME three-kernel superstep (sample -> pairgen -> merge) with the
-corpus matrix partitioned into G hash blocks and the in-kernel scoring
-replaced by a two-stage cogroup gather (the CSR cogroup pattern,
-operators/csr.py).
+— there is no algorithmic cliff between "small" and "large" N. So the
+engine has one loop, nn_descent_blocked, at every size; only the scoring
+stage has two forms. While the float32 matrix fits a driver broadcast
+(knn_graph.broadcast_matrix), pairgen scores its pairs in place against
+it. Beyond that, the matrix is partitioned into G hash blocks and
+scored by a two-stage cogroup gather (the CSR cogroup pattern,
+operators/csr.py); nothing is broadcast.
 
 The round-4 measured bottleneck was not arithmetic but ROW MACHINERY: a
 1M-vector round moved ~500M five-column rows through 5 chained
@@ -23,33 +22,38 @@ star's own prescription ("adjacency as per-partition CSR blocks: Arrow
 arrays of offsets + packed neighbor ids") applied to the descent loop's
 transient state as well as the adjacency itself.
 
-Superstep dataflow (B merge blocks, G embedding blocks):
+Superstep dataflow (B merge blocks; the numpy cores are in nnd_fused):
 
-  sample  : packed pool rows grouped by blk -> S new + S old per vertex
-            (nnd_fused._sample_np), re-segmented by blk(key) and emitted
-            as <= B packed rows per group.
+  sample  : narrow map over the packed pool rows -> S new + S old per
+            vertex (_sample_np), re-segmented by blk(key) and emitted
+            as <= B packed rows per pool row.
   pairgen : sample rows grouped by blk(key) -> reverse reservoir cap +
-            local join + canonical dedupe (nnd_fused._canonical_pairs),
-            emitted as <= G packed rows of 16-byte pair keys, keyed by
-            g = blk(lo).
-  gather-1: cogroup(pairs by g, emb_blocks by g) — global pair dedupe
-            for the block, then ONE packed row per destination grid
-            cell g2 = blk(hi, gh) * r + blk(lo, r): the pair keys plus
-            the UNIQUE lo vectors gathered from block g (each distinct
-            lo vector ships once per cell, never once per pair — and
-            because the stripe is a function of lo, at most gh cells
-            total; see grid_dims for why gh ~ sqrt(tasks)).
-  gather-2: cogroup(cells by g2, replicated coarse emb cells) — gather
-            hi vectors,
-            score with the preallocated-buffer L2 kernel
-            (nnd_fused.l2_gathered), emit symmetric insert candidates
-            pre-capped at L per target (map-side combine) as <= B packed
-            rows keyed by merge block.
-  merge   : cogroup(packed pool, packed candidates ∪ clears) by blk ->
-            nnd_fused._merge_np (min-dist dedupe, top-L, flag clears,
-            fresh marking), ONE packed pool row out per block plus its
-            entry/fresh counts (so convergence needs one agg, not two
-            counts).
+            local join + canonical dedupe (_canonical_pairs), then
+            scoring in one of two forms:
+    broadcast: score the pairs in place (l2_gathered against the
+            broadcast matrix) and emit the capped candidates
+            (_emit_candidates) as <= B packed rows keyed by merge block.
+    gather  : emit <= G packed rows of 16-byte pair keys, keyed by
+            g = blk(lo), into two cogroups with the sharded matrix:
+      gather-1: cogroup(pairs by g, emb_blocks by g) — global pair
+            dedupe for the block, then ONE packed row per destination
+            grid cell g2 = blk(hi, gh) * r + blk(lo, r): the pair keys
+            plus the UNIQUE lo vectors gathered from block g (each
+            distinct lo vector ships once per cell, never once per
+            pair — and because the stripe is a function of lo, at most
+            gh cells total; see grid_dims for why gh ~ sqrt(tasks)).
+      gather-2: cogroup(cells by g2, replicated coarse emb cells) —
+            gather hi vectors, score with l2_gathered, emit the capped
+            candidates (_emit_candidates) keyed by merge block.
+  merge   : cogroup(packed pool, packed candidates) by blk -> _merge_np
+            (min-dist dedupe, top-L, flag clears, fresh marking), ONE
+            packed pool row out per block plus its entry/fresh counts.
+            The flag clears are the forward sample's new entries, which
+            the merge re-derives from the round-start pool it holds
+            (_sampled_new), so nothing but candidates crosses into it.
+
+One Spark action per round: the truncate that materializes the merged
+pool; the entry/fresh counts are observed inside that job.
 
 Placement: every packed exchange groups by a small dense integer key
 (blk in [0, B), g in [0, G), g2 in [0, gh*r)), so each grouping side is
@@ -64,21 +68,21 @@ equal key counts needs no exchange over the cache. Both sides must be
 placed: against a hash-placed fresh side Spark re-shuffles the cache.
 
 Scale accounting per superstep (N vertices, sample S, pool L, dim d):
-candidate volume is the reference's N*O(S^2) either way. The gathered-
-vector duplication is bounded by min(pairs, touched-rows x G) x 4d — it
-GROWS with the embedding block count G, while gather-task parallelism
+candidate volume is the reference's N*O(S^2) in both scoring forms. On
+the gather path the gathered-vector duplication is bounded by
+min(pairs, touched-rows x G) x 4d — it GROWS with the embedding block count G, while gather-task parallelism
 EQUALS G, so G balances the two (see n_emb_blocks: matrix bytes /
 EMB_BLOCK_BYTES and a pair-buffer floor for memory, a core-count floor
 capped at the candidate fan-out for CPU). On a real cluster
 EMB_BLOCK_BYTES is the per-task memory knob: G grows linearly with
 corpus bytes, so per-task memory stays constant at any N. Nothing is
-ever broadcast, collected, or required to fit on one node.
+broadcast, collected, or required to fit on one node.
 
-Bit-identity: sampling hashes and scoring arithmetic are shared with
-the fused path (nnd_fused._sample_np/_canonical_pairs/_merge_np/
+Bit-identity: sampling hashes and scoring arithmetic are shared by both
+scoring forms (nnd_fused._sample_np/_canonical_pairs/_merge_np/
 l2_gathered), and every kernel totally orders its group's entries
-before acting, so the blocked build is BIT-IDENTICAL to the fused build
-round for round (asserted in tests/test_nnd_blocked.py).
+before acting, so broadcast and gather scoring build BIT-IDENTICAL
+graphs round for round (asserted in tests/test_nnd_blocked.py).
 
 Wire payloads (network levers for byte-bound clusters; local wall is
 page-cache-bound and measured payload-insensitive, BENCH.md): the
@@ -95,7 +99,7 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kgraph_framework_spark.operators.nnd_fused import (
@@ -107,6 +111,7 @@ from kgraph_framework_spark.operators.nnd_fused import (
     _pack2,
     _ranks,
     _sample_np,
+    _sampled_new,
     _unpack2,
     auto_n_blocks,
     blk_col,
@@ -175,9 +180,7 @@ PACK_P_SCHEMA = (
     "u_tau binary, t_ids binary, t_tau binary"
 )
 TAU_P_SCHEMA = "g int, t_ids binary, t_tau binary"
-CAND_P_SCHEMA = (
-    "blk int, clear boolean, src binary, dst binary, dist binary"
-)
+CAND_P_SCHEMA = "blk int, src binary, dst binary, dist binary"
 MERGE_P_SCHEMA = POOL_P_SCHEMA + ", n_entries long, n_fresh long"
 
 _POOL_P_COLS = {"blk": "int32", "src": "object", "dst": "object",
@@ -189,8 +192,8 @@ _PACK_P_COLS = {"g2": "int32", "pk": "object", "u_ids": "object",
                 "u_mat": "object", "dim": "int32", "u_tau": "object",
                 "t_ids": "object", "t_tau": "object"}
 _TAU_P_COLS = {"g": "int32", "t_ids": "object", "t_tau": "object"}
-_CAND_P_COLS = {"blk": "int32", "clear": "bool", "src": "object",
-                "dst": "object", "dist": "object"}
+_CAND_P_COLS = {"blk": "int32", "src": "object", "dst": "object",
+                "dist": "object"}
 _MERGE_P_COLS = dict(_POOL_P_COLS, n_entries="int64", n_fresh="int64")
 
 
@@ -504,8 +507,7 @@ def unpack_pool_topk(pool_p: DataFrame, k: int | None) -> DataFrame:
     """Unpack packed pool rows to (src, dst, dist) rows, optionally
     cutting to per-src top-k in place. Merge output is already (src
     grouped, (dist, dst)-ascending within src, unique (src, dst)), so
-    the in-place rank filter equals nnd_fused.topk_per_src — asserted
-    bit-identical against the fused path in tests/test_nnd_blocked.py."""
+    the in-place rank filter equals nnd_fused.topk_per_src."""
 
     def fn(it):
         for pdf in it:
@@ -689,33 +691,19 @@ def _sample_packed_map(s: int, n_blocks: int, rev_seed: int):
     return it_fn
 
 
-def _clears_packed(it):
-    """Derive the flag-clear rows (sampled-new FORWARD entries,
-    src/index_graph.cpp:88-111) from persisted packed sample rows —
-    a narrow map, no shuffle: a forward entry's key IS its merge block."""
-    for pdf in it:
-        for row in pdf.itertuples(index=False):
-            fwd = np.frombuffer(row.fwd, np.uint8).astype(bool)
-            isn = np.frombuffer(row.is_new, np.uint8).astype(bool)
-            m = fwd & isn
-            if not m.any():
-                continue
-            key = np.frombuffer(row.key, np.int64)[m]
-            nbr = np.frombuffer(row.nbr, np.int64)[m]
-            yield pd.DataFrame(
-                {"blk": [int(row.blk)], "clear": [True],
-                 "src": [key.tobytes()], "dst": [nbr.tobytes()],
-                 "dist": [np.zeros(key.size, np.float64).tobytes()]}
-            )
-
-
-def _pairgen_packed_kernel(s: int, seed: int, g_blocks: int, excl_bc):
+def _pairgen_packed_kernel(s: int, seed: int, excl_bc, n_out: int,
+                           bc=None, l: int = 0):
     """Stage 2 (packed): reverse reservoir cap + local join + canonical
-    dedupe, emitting 16-byte pair keys segmented by g = blk(lo)."""
+    dedupe. Without ``bc`` it emits 16-byte pair keys segmented by
+    g = blk(lo, n_out) for the cogroup gather. With a broadcast-matrix
+    handle it scores the pairs in place (l2_gathered) and emits the
+    candidates straight to the merge: capped at ``l`` per target,
+    packed by merge block blk(target, n_out)."""
+    empty = _PAIR_P_COLS if bc is None else _CAND_P_COLS
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
-            return _empty(_PAIR_P_COLS)
+            return _empty(empty)
         lo, hi = _canonical_pairs(
             _cat(pdf, "key", np.int64),
             _cat(pdf, "nbr", np.int64),
@@ -724,9 +712,14 @@ def _pairgen_packed_kernel(s: int, seed: int, g_blocks: int, excl_bc):
             s, seed, excl_bc,
         )
         if lo.size == 0:
-            return _empty(_PAIR_P_COLS)
-        return _segment_rows(
-            _blk_np(lo, g_blocks), {"pk": _pack2(lo, hi)}, blk_name="g"
+            return _empty(empty)
+        if bc is None:
+            return _segment_rows(
+                _blk_np(lo, n_out), {"pk": _pack2(lo, hi)}, blk_name="g"
+            )
+        ids, X = bc.value
+        return _emit_candidates(
+            lo, hi, l2_gathered(X, ids, lo, X, ids, hi), l, n_out
         )
 
     return fn
@@ -832,10 +825,27 @@ def _score_cells(packs_pdf: pd.DataFrame, emb_pdf: pd.DataFrame):
             np.concatenate(dists), np.concatenate(taus))
 
 
+def _emit_candidates(lo: np.ndarray, hi: np.ndarray, dists: np.ndarray,
+                     l: int, n_blocks: int,
+                     keep_lo=slice(None), keep_hi=slice(None)) -> pd.DataFrame:
+    """Symmetric insert candidates of scored pairs, pre-capped at L per
+    target (a map-side combine of the merge's top-L), packed per merge
+    block. ``keep_lo``/``keep_hi`` drop the lo-/hi-target direction of
+    pairs whose dist exceeds that target's tau (see _tau_packed_map)."""
+    t = np.concatenate([lo[keep_lo], hi[keep_hi]])
+    tn = np.concatenate([hi[keep_lo], lo[keep_hi]])
+    td = np.concatenate([dists[keep_lo], dists[keep_hi]])
+    t, td, tn = _order_target_dist(t, td, tn)
+    kp = _ranks(np.r_[True, t[1:] != t[:-1]]) < l
+    t, tn, td = t[kp], tn[kp], td[kp]
+    return _segment_rows(
+        _blk_np(t, n_blocks), {"src": t, "dst": tn, "dist": td}
+    )
+
+
 def _gather2_kernel(l: int, n_blocks: int):
-    """Stage 2c: score cells against the hi-side block, emit symmetric
-    insert candidates pre-capped at L per target (the same map-side
-    combine as the fused pairgen tail), packed per merge block. A
+    """Stage 2c: score cells against the hi-side block and emit the
+    capped candidates per merge block (_emit_candidates). A
     candidate is dropped at the emit site when its dist exceeds the
     target's round-start insertion threshold (F5; see _tau_packed_map —
     provably merge-identical): lo-side thresholds ride the packs
@@ -862,26 +872,21 @@ def _gather2_kernel(l: int, n_blocks: int):
         if scored is None:
             return _empty(_CAND_P_COLS)
         lo, hi, dists, tau_lo = scored
-        keep_lo = dists <= tau_lo
-        keep_hi = dists <= _tau_lookup(th_ids, th_tau, hi)
-        t = np.concatenate([lo[keep_lo], hi[keep_hi]])
-        tn = np.concatenate([hi[keep_lo], lo[keep_hi]])
-        td = np.concatenate([dists[keep_lo], dists[keep_hi]])
-        t, td, tn = _order_target_dist(t, td, tn)
-        kp = _ranks(np.r_[True, t[1:] != t[:-1]]) < l
-        t, tn, td = t[kp], tn[kp], td[kp]
-        out = _segment_rows(
-            _blk_np(t, n_blocks), {"src": t, "dst": tn, "dist": td}
+        return _emit_candidates(
+            lo, hi, dists, l, n_blocks,
+            keep_lo=dists <= tau_lo,
+            keep_hi=dists <= _tau_lookup(th_ids, th_tau, hi),
         )
-        out["clear"] = False
-        return out[["blk", "clear", "src", "dst", "dist"]]
 
     return fn
 
 
-def _merge_packed_kernel(l: int):
+def _merge_packed_kernel(l: int, s: int):
     """Stage 3 (packed): pool ∪ candidates -> min-dedupe, top-L, flags,
-    fresh; ONE packed pool row out per block plus its counts."""
+    fresh; ONE packed pool row out per block plus its counts. The flag
+    clears are the forward sample's new entries, which this kernel
+    re-derives from the round-start pool it already holds
+    (nnd_fused._sampled_new) — no clear rows cross the exchange."""
 
     def fn(pool_pdf: pd.DataFrame, cand_pdf: pd.DataFrame) -> pd.DataFrame:
         if pool_pdf.empty and cand_pdf.empty:
@@ -890,23 +895,14 @@ def _merge_packed_kernel(l: int):
         pdd = _cat(pool_pdf, "dst", np.int64)
         pdist = _cat(pool_pdf, "dist", np.float64)
         pnew = _cat(pool_pdf, "is_new", np.uint8).astype(bool)
-
-        if len(cand_pdf):
-            clr = cand_pdf["clear"].to_numpy(bool)
-            creal, cclear = cand_pdf[~clr], cand_pdf[clr]
-            cs = _cat(creal, "src", np.int64)
-            cd = _cat(creal, "dst", np.int64)
-            cdist = _cat(creal, "dist", np.float64)
-            clears = np.sort(
-                _pack2(_cat(cclear, "src", np.int64),
-                       _cat(cclear, "dst", np.int64))
-            )
-        else:
-            cs = cd = np.empty(0, np.int64)
-            cdist = np.empty(0)
-            clears = np.empty(0, "V16")
-
-        out = _merge_np(ps, pdd, pdist, pnew, cs, cd, cdist, clears, l)
+        out = _merge_np(
+            ps, pdd, pdist, pnew,
+            _cat(cand_pdf, "src", np.int64),
+            _cat(cand_pdf, "dst", np.int64),
+            _cat(cand_pdf, "dist", np.float64),
+            _sampled_new(ps, pdd, pnew, pdist, s),
+            l,
+        )
         if out is None:
             return _empty(_MERGE_P_COLS)
         s2, d2, dist2, is_new, fresh = out
@@ -1011,26 +1007,41 @@ def nn_descent_blocked(
     min_recall: float | None = None,
     control_bc=None,
     control_total: int = 0,
+    bc=None,
 ) -> tuple[DataFrame, list[dict]]:
-    """Blocked superstep loop — same contract as nnd_fused.nn_descent_fused
-    but with NO broadcast-matrix requirement. Returns (pool, metrics);
-    with ``final_k`` set the returned DataFrame is the finished graph
-    (per-src top-k, equal to topk_per_src of the pool). The default fp32
-    payload stays bit-identical to the fused path.
+    """The NN-descent superstep loop. Returns (pool, metrics); with
+    ``final_k`` set the returned DataFrame is the finished graph
+    (per-src top-k, equal to topk_per_src of the pool).
+
+    Scoring is the one stage with two forms (module docstring). With
+    ``bc``, a knn_graph.broadcast_matrix handle, pairgen scores in place
+    against the broadcast matrix: no embedding caches, no gathers, no
+    tau rows, and ``g_blocks``/``grid``/``block_bytes``/``row_bytes``/
+    ``tau_filter`` (which size and drive the gather) do not act.
+    Without it the matrix is sharded into cogrouped blocks and nothing
+    is broadcast. The fp32 forms are bit-identical.
 
     The exact-distance contract for ``payload="int8"`` holds only via
     the ``final_k`` re-rank below (the nn_descent front door always
     sets it): without ``final_k`` the returned POOL carries quantized
     distances, so direct callers get a warning.
 
-    ``min_recall`` + ``control_bc``/``control_total`` (prepared by
-    nn_descent) enable the reference's own convergence criterion:
-    sampled recall of the pool vs exact control truth, evaluated each
-    round (packed_pool_recall), stopping past the threshold
-    (src/index_graph.cpp:172-179). The update-rate stop stays active
-    alongside; pass min_update_rate=0 for pure reference semantics."""
-    from kgraph_framework_spark.operators.knn_graph import random_init
+    Each round runs one Spark action: the truncate that materializes the
+    merged pool, which also carries the round's entry and fresh counts
+    (``DataFrame.observe``). ``min_recall`` + ``control_bc``/
+    ``control_total`` (prepared by nn_descent) add the reference's
+    sampled-recall criterion (src/index_graph.cpp:172-179): recall of
+    the pool vs exact control truth, evaluated after each round
+    (packed_pool_recall, one more action), stopping once it is
+    >= ``min_recall``. The update-rate stop stays active alongside;
+    pass min_update_rate=0 for recall-only stopping."""
+    from kgraph_framework_spark.operators.knn_graph import (
+        _score_pairs,
+        random_init,
+    )
 
+    if payload == "int8" and bc is not None:
+        raise ValueError("payload='int8' needs the gather path (bc=None)")
     if payload == "int8" and final_k is None:
         import warnings
 
@@ -1041,83 +1052,68 @@ def nn_descent_blocked(
             stacklevel=2,
         )
 
-    row = emb.select(
-        F.count(F.lit(1)).alias("n"), F.min(F.size("embedding")).alias("d")
-    ).first()
-    n, dim = int(row["n"] or 0), int(row["d"] or 0)
     dp = spark.sparkContext.defaultParallelism
-    B = n_blocks or auto_n_blocks(dp, n, l)
-    G = g_blocks or n_emb_blocks(n, dim, s, block_bytes, parallelism=dp)
-    gh, r = grid or grid_dims(n, dim, dp, block_bytes)
-
-    # The corpus-derived cogroup sides never change between rounds, so
-    # cache them ALREADY PLACED by key id: block g on partition g of G,
-    # cell g on partition g of gh*r. Every round places its fresh pair
-    # and pack sides the same way, so the two sides of each gather are
-    # co-partitioned and EnsureRequirements adds no exchange over the
-    # cache. That elides the per-round re-ship of the sharded matrix
-    # (~corpus bytes) and of the r-replicated grid cells (~r*corpus
-    # bytes) — the two static byte-edges the round-4 stage attribution
-    # measured at ~1.5 GB/round on a 256 MB corpus — and gives every
-    # block and cell its own task (module docstring, "Placement").
-    emb_blocks = (
-        build_emb_blocks(emb, G, payload, row_bytes)
-        .repartitionById(G, "g")
-        .persist()
-    )
-    emb_blocks.count()
-    if (gh, r) == (G, 1):
-        emb_cells = emb_blocks
+    pool = init if init is not None else random_init(emb, k, seed)
+    init_pairs = pool.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    emb_blocks = emb_cells = None
+    if bc is not None:
+        n = len(bc.value[0])
+        scored = _score_pairs(init_pairs, emb, bc)
     else:
-        emb_cells = (
-            replicate_emb_cells(build_emb_blocks(emb, gh, payload, row_bytes), r)
-            .repartitionById(gh * r, "g")
+        row = emb.select(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.size("embedding")).alias("d"),
+        ).first()
+        n, dim = int(row["n"] or 0), int(row["d"] or 0)
+        G = g_blocks or n_emb_blocks(n, dim, s, block_bytes, parallelism=dp)
+        gh, r = grid or grid_dims(n, dim, dp, block_bytes)
+        # The corpus-derived cogroup sides never change between rounds,
+        # so cache them ALREADY PLACED by key id: block g on partition g
+        # of G, cell g on partition g of gh*r. Every round places its
+        # fresh pair and pack sides the same way, so the two sides of
+        # each gather are co-partitioned and EnsureRequirements adds no
+        # exchange over the cache. That elides the per-round re-ship of
+        # the sharded matrix (~corpus bytes) and of the r-replicated
+        # grid cells (~r*corpus bytes) — the two static byte-edges the
+        # round-4 stage attribution measured at ~1.5 GB/round on a
+        # 256 MB corpus — and gives every block and cell its own task
+        # (module docstring, "Placement").
+        emb_blocks = (
+            build_emb_blocks(emb, G, payload, row_bytes)
+            .repartitionById(G, "g")
             .persist()
         )
-        emb_cells.count()
+        emb_blocks.count()
+        if (gh, r) == (G, 1):
+            emb_cells = emb_blocks
+        else:
+            emb_cells = (
+                replicate_emb_cells(
+                    build_emb_blocks(emb, gh, payload, row_bytes), r
+                )
+                .repartitionById(gh * r, "g")
+                .persist()
+            )
+            emb_cells.count()
+        scored = score_pairs_blocked(
+            init_pairs, emb_blocks, G, emb_cells=emb_cells, gh=gh, r=r,
+            row_bytes=row_bytes,
+        )
+    B = n_blocks or auto_n_blocks(dp, n, l)
     excl_bc = None
     if exclude_pairs is not None:
         excl_bc = collect_exclusion(exclude_pairs, spark)
 
-    pool = init if init is not None else random_init(emb, k, seed)
-    scored = score_pairs_blocked(
-        pool.select(F.col("src").alias("a"), F.col("dst").alias("b")),
-        emb_blocks,
-        G,
-        emb_cells=emb_cells,
-        gh=gh,
-        r=r,
-        row_bytes=row_bytes,
-    )
     pool_rows = scored.select(
         F.col("a").alias("src"), F.col("b").alias("dst"), "dist",
         F.lit(True).alias("is_new"),
     )
     pool_p = truncate_state(spark, pack_pool(pool_rows, B))
 
-    metrics: list[dict] = []
-    n_edges_target = None
-    prev_rate = 1.0
-    for it in range(max_iters):
-        t_round = time.monotonic()
-        engage_tau = tau_filter and prev_rate < tau_engage_rate
-        samples = (
-            pool_p.mapInPandas(
-                # rev_seed == the pairgen reservoir seed below, so the
-                # sender-side pre-cut ranks exactly like the receiver
-                _sample_packed_map(s, B, rev_seed=seed + 3 * it + 2),
-                SAMPLE_P_SCHEMA,
-            )
-            .persist()
-        )
-        clears = samples.mapInPandas(_clears_packed, CAND_P_SCHEMA)
-        upairs = (
-            samples.repartitionById(B, "blk")
-            .groupBy("blk")
-            .applyInPandas(
-                _pairgen_packed_kernel(s, seed + 3 * it + 2, G, excl_bc),
-                PAIR_P_SCHEMA,
-            )
+    def gather_scored(pool_p, samples, rseed: int, engage_tau: bool):
+        """Gather-path scoring: pair keys -> gather-1 -> gather-2."""
+        upairs = samples.groupBy("blk").applyInPandas(
+            _pairgen_packed_kernel(s, rseed, excl_bc, G), PAIR_P_SCHEMA
         )
         nb = F.lit(None).cast("binary")
         pairs_in = upairs.select("g", "pk", nb.alias("t_ids"),
@@ -1150,31 +1146,53 @@ def nn_descent_blocked(
                     "t_ids", "t_tau",
                 )
             )
-        scored_cands = (
+        return (
             packs.repartitionById(gh * r, "g2")
             .groupBy("g2")
             .cogroup(emb_cells.groupBy("g"))
             .applyInPandas(_gather2_kernel(l, B), CAND_P_SCHEMA)
         )
-        cands = scored_cands.unionByName(clears)
+
+    metrics: list[dict] = []
+    n_edges_target = None
+    prev_rate = 1.0
+    for it in range(max_iters):
+        t_round = time.monotonic()
+        # one reservoir seed per round: the sample's sender-side pre-cut
+        # must rank exactly like pairgen's receiver-side reservoir
+        rseed = seed + 3 * it + 2
+        engage_tau = (
+            bc is None and tau_filter and prev_rate < tau_engage_rate
+        )
+        samples = pool_p.mapInPandas(
+            _sample_packed_map(s, B, rev_seed=rseed), SAMPLE_P_SCHEMA
+        ).repartitionById(B, "blk")
+        if bc is not None:
+            cands = samples.groupBy("blk").applyInPandas(
+                _pairgen_packed_kernel(s, rseed, excl_bc, B, bc=bc, l=l),
+                CAND_P_SCHEMA,
+            )
+        else:
+            cands = gather_scored(pool_p, samples, rseed, engage_tau)
         merged = (
             pool_p.repartitionById(B, "blk")
             .groupBy("blk")
             .cogroup(cands.repartitionById(B, "blk").groupBy("blk"))
-            .applyInPandas(_merge_packed_kernel(l), MERGE_P_SCHEMA)
+            .applyInPandas(_merge_packed_kernel(l, s), MERGE_P_SCHEMA)
         )
-        new_pool = truncate_state(spark, merged)
-        agg = new_pool.agg(
-            F.sum("n_entries").alias("ne"), F.sum("n_fresh").alias("nf")
-        ).first()
-        fresh = int(agg["nf"] or 0)
-        samples.unpersist()
+        # the round's counts ride the job that materializes the pool
+        obs = Observation()
+        new_pool = truncate_state(spark, merged.observe(
+            obs, F.sum("n_entries").alias("ne"), F.sum("n_fresh").alias("nf")
+        ))
+        counts = obs.get
+        fresh = int(counts["nf"] or 0)
         release_state(pool_p)
         # a blocked round at 1M vecs writes tens of GB of shuffle; force
         # the superseded round's files off disk before the next one starts
         reclaim_shuffles(spark, n)
         if n_edges_target is None:
-            n_edges_target = int(agg["ne"] or 0)
+            n_edges_target = int(counts["ne"] or 0)
         rate = fresh / max(n_edges_target, 1)
         row_m = {"superstep": it, "new_entries": fresh,
                  "update_rate": rate, "tau_engaged": engage_tau,
@@ -1199,7 +1217,8 @@ def nn_descent_blocked(
         excl_bc.unpersist()
     if emb_cells is not emb_blocks:
         emb_cells.unpersist()
-    emb_blocks.unpersist()
+    if emb_blocks is not None:
+        emb_blocks.unpersist()
     if payload == "int8" and final_k is not None:
         # exact re-rank of the top band: the loop ran on quantized wire
         # vectors (~0.4%-of-max rounding), so re-score the top

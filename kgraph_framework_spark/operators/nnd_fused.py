@@ -1,62 +1,53 @@
-"""Fused NN-descent supersteps: three grouped Arrow kernels per round.
+"""Shared numpy cores of the NN-descent round, and broadcast scoring.
 
 Reference: the NN-descent iteration (/root/reference/src/index_graph.cpp:
-139-190) keeps per-vertex neighbor pools in RAM and mutates them in place.
-The round-2 Spark translation ran each sub-step (sample, reverse, local
-join, score, merge, re-topL, flag maintenance) as its own chain of wide
-DataFrame ops — ~8 shuffles and 3 actions per superstep, measured ~24x
-slower per vector than the reference's published SIFT1M build. This module
-collapses one superstep into THREE ``applyInPandas`` kernels over hash
-blocks of vertices (the CSR-block pattern from operators/csr.py):
+139-190) keeps per-vertex neighbor pools in RAM and mutates them in
+place. The engine runs it as ONE loop over packed per-block rows,
+operators/nnd_blocked.nn_descent_blocked; this module holds what each of
+that loop's stages computes on one block's entries:
 
-  1. sample  : pool rows grouped by block(src) -> S new + S old samples
-               per vertex (reference update() sampling,
-               src/index_graph.cpp:62-77), each emitted twice — forward
-               keyed by src, reverse keyed by dst.
-  2. pairgen : samples grouped by block(key) -> reservoir-cap the reverse
-               lists at S per flag (:78-113), build per-vertex new/old
-               lists, generate new x new (a<b) + new x old candidate
-               pairs (join(), :20-45; neighbor.h:86-98), block-dedupe
-               canonical pairs, score them IN PLACE against the broadcast
-               float32 matrix (no embedding join), and pre-cap candidates
-               per target at L (map-side combine). One shuffle carries
-               scored candidates.
-  3. merge   : cogroup(pool, candidates) by block -> min-dist dedupe,
-               per-vertex top-L (the nhood pool re-aggregation,
-               include/commom/neighbor.h:39-99), flag maintenance
-               (sampled-new entries cleared, :88-111), fresh-insert
-               counting for the convergence rate (:172-173).
+  _sample_np       : S new + S old top-of-pool samples per vertex
+                     (update(), src/index_graph.cpp:62-77), emitted
+                     forward (keyed by src) and reverse (keyed by dst),
+                     with the exact sender-side reverse pre-cut.
+  _canonical_pairs : reverse reservoir cap at S per flag (:78-113),
+                     per-vertex new/old lists, new x new (a<b) + new x
+                     old local join (join(), :20-45; neighbor.h:86-98),
+                     block-level canonical dedupe and exclusion.
+  _sampled_new     : the flag clears — the forward sample's new entries,
+                     derived again from the round-start pool by the merge.
+  _merge_np        : min-dist dedupe, per-vertex top-L (the nhood pool
+                     re-aggregation, include/commom/neighbor.h:39-99),
+                     flag maintenance (sampled-new entries cleared,
+                     :88-111), fresh-insert marking for the convergence
+                     rate (:172-173).
+  l2_gathered      : THE distance kernel — chunked einsum over gathers
+                     from (sorted ids, float32 matrix) stores.
 
 Every per-vertex operation is a segmented numpy op over the block's rows
-(sort + boundary detection), never a per-row Python loop; scoring is
-chunked einsum over gathers from the broadcast matrix — bit-identical
-distances to knn_graph._score_pairs (same float32 storage, float64
-arithmetic). Requires the corpus matrix to fit in a broadcast
-(knn_graph.SCORE_BROADCAST_BYTES); corpora above the cap — the 100-TB
-path — run the SAME kernels with the matrix sharded into cogrouped
-blocks (operators/nnd_blocked, bit-identical output). Candidate volume
-per round is the same N*O(S^2) either way; the reverse reservoir cap is
-the skew bound.
+(sort + boundary detection), never a per-row Python loop, and every core
+totally orders its group's entries before acting, so results do not
+depend on block count or row order.
+
+Broadcast scoring: when the corpus matrix fits a driver broadcast
+(knn_graph.broadcast_matrix), the loop's pairgen scores its canonical
+pairs IN PLACE with l2_gathered against the handle instead of through the
+cogroup gather — same float32 storage, same float64 arithmetic, so both
+scoring paths build the bit-identical graph. score_sym_topk and
+topk_per_src serve the init pipelines (kdtree, LSH) that score against
+the same handle.
 """
 
 from __future__ import annotations
-
-import time
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgraph_framework_spark.plans.pregel import (
-    reclaim_shuffles,
-    release_state,
-    truncate_state,
-)
-
-SAMPLE_SCHEMA = "blk int, key long, nbr long, is_new boolean, fwd boolean"
-CAND_SCHEMA = "blk int, src long, dst long, dist double, clear boolean"
-MERGE_SCHEMA = "src long, dst long, dist double, is_new boolean, fresh boolean"
+# not called here: the descent loop's truncation runs in nnd_blocked, but
+# tracers patch truncate_state by (module, name) at both operator modules
+from kgraph_framework_spark.plans.pregel import truncate_state  # noqa: F401
 
 #: exclusion sets (init-compared pairs) above this row count are not
 #: collected/broadcast — skipping exclusion only re-scores pairs whose
@@ -136,31 +127,30 @@ POOL_ROWS_PER_BLOCK = 2_000_000
 #: pool rows (N x L) below which the 4x floor reverts to a plain
 #: core-count floor: with tiny pools the per-group fixed cost of 4x
 #: more applyInPandas groups outweighs the hash-collision fix.
-#: Measured both sides (tools/fused_floor_ab.py, 2x2 interleaved
-#: fresh-JVM pairs, identical checksums): at 50k x l=30 (1.5M pool
-#: rows) B=128 wins both pairs (13.0/13.3 vs 16.0/16.0 s rounds-wall);
-#: at 20k x l=30 (0.6M rows) B=32 wins both (9.1/8.3 vs 9.5/10.7 s).
-#: Crossover set at the ~geometric midpoint.
+#: Measured both sides on the broadcast-scored loop (BENCH.md
+#: "Fused-path 4x-floor A/B", 2x2 interleaved fresh-JVM pairs,
+#: identical checksums): at 50k x l=30 (1.5M pool rows) B=128 wins both
+#: pairs (13.0/13.3 vs 16.0/16.0 s rounds-wall); at 20k x l=30 (0.6M
+#: rows) B=32 wins both (9.1/8.3 vs 9.5/10.7 s). Crossover set at the
+#: ~geometric midpoint.
 FLOOR4_MIN_POOL_ROWS = 1_000_000
 
 
 def auto_n_blocks(default_parallelism: int, n_vecs: int, l: int) -> int:
-    """Block count for the fused/blocked kernels: enough blocks that
-    each holds ~POOL_ROWS_PER_BLOCK pool rows, never fewer than 4x the
-    core count (plain core count below FLOOR4_MIN_POOL_ROWS — see the
-    measured crossover above). The 4x floor is a hash-collision fix,
-    not extra parallelism per se: B distinct blk keys hash into the
-    shuffle's P partitions, and with B ~ P a large fraction of
-    partitions receive zero keys (E[non-empty] = P(1-(1-1/P)^B) — e.g.
-    32 keys into 64 partitions leave ~25 busy tasks on 32 cores,
-    measured as a 21-task merge stage). At 4x the keys the reduce side
-    fills and the per-key load evens out. Measured (BENCH.md n_blocks
-    A/B, 500k x 128-d, both interleaved pairs): rounds-wall 162/209 +
-    150/241 s at B=32 vs 136/155 + 95/99 s at B=128 — up to 1.6x; the
-    same direction on the FUSED path at 50k (fused_floor_ab). The
-    blocked loop no longer hashes its blocks into partitions: it places
-    block ``b`` on partition ``b`` (repartitionById), so there the floor
-    only sizes the blocks; the fused loop still hash-partitions."""
+    """Merge/sample block count B of the descent loop: enough blocks
+    that each holds ~POOL_ROWS_PER_BLOCK pool rows, never fewer than 4x
+    the core count (plain core count below FLOOR4_MIN_POOL_ROWS — see
+    the measured crossover above). The 4x floor was measured as a
+    hash-collision fix: B distinct blk keys hashed into the shuffle's P
+    partitions, and with B ~ P a large fraction of partitions received
+    zero keys (E[non-empty] = P(1-(1-1/P)^B) — e.g. 32 keys into 64
+    partitions leave ~25 busy tasks on 32 cores, measured as a 21-task
+    merge stage). Measured (BENCH.md n_blocks A/B, 500k x 128-d, both
+    interleaved pairs): rounds-wall 162/209 + 150/241 s at B=32 vs
+    136/155 + 95/99 s at B=128 — up to 1.6x; the same direction on the
+    broadcast-scored loop at 50k. The loop now places block ``b`` on
+    partition ``b`` (repartitionById), so the floor only sizes the
+    blocks; those measurements are why it stays."""
     need = -(-(n_vecs * l) // POOL_ROWS_PER_BLOCK)  # ceil div
     floor = (
         4 * default_parallelism
@@ -252,14 +242,6 @@ def _order_target_dist(
     return t2, d2, n2
 
 
-_SAMPLE_COLS = {"blk": "int32", "key": "int64", "nbr": "int64",
-                "is_new": "bool", "fwd": "bool"}
-_CAND_COLS = {"blk": "int32", "src": "int64", "dst": "int64",
-              "dist": "float64", "clear": "bool"}
-_MERGE_COLS = {"src": "int64", "dst": "int64", "dist": "float64",
-               "is_new": "bool", "fresh": "bool"}
-
-
 def topk_per_src(
     df: DataFrame, k: int, n_blocks: int | None = None
 ) -> DataFrame:
@@ -339,42 +321,6 @@ def score_sym_topk(pairs: DataFrame, bc, k: int) -> DataFrame:
     )
 
 
-def _sample_kernel(s: int, seed: int, n_blocks: int):
-    """Stage 1: per-vertex S new + S old samples, emitted fwd + rev.
-
-    Samples are TOP-OF-POOL — the S closest entries per flag, by (dist,
-    dst) — matching the reference's update(), which scans each pool in
-    ascending distance order and takes flagged entries until S are seen
-    (/root/reference/src/index_graph.cpp:62-77). At small S (the SIFT1M
-    parameterization S=10, L=70) this IS the descent gradient: joining
-    the closest candidates' neighborhoods is what makes the graph
-    descend; a hash-random S of a 70-pool (rounds 2-3 of this engine)
-    converges only when S is a large fraction of L. ``seed`` must be
-    the SAME reservoir seed the round's pairgen kernel uses
-    (seed + 3*it + 2): it drives the exact sender-side reverse pre-cut
-    (see _sample_np) whose per-block top-S order must match the
-    receiver-side reservoir's.
-    """
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return _empty(_SAMPLE_COLS)
-        key, nbr, isn, fwd = _sample_np(
-            pdf["src"].to_numpy(np.int64),
-            pdf["dst"].to_numpy(np.int64),
-            pdf["is_new"].to_numpy(bool),
-            pdf["dist"].to_numpy(np.float64),
-            s,
-            rev_seed=seed,
-        )
-        return pd.DataFrame(
-            {"blk": _blk_np(key, n_blocks), "key": key, "nbr": nbr,
-             "is_new": isn, "fwd": fwd}
-        )
-
-    return fn
-
-
 def _sample_np(
     src: np.ndarray,
     dst: np.ndarray,
@@ -383,11 +329,13 @@ def _sample_np(
     s: int,
     rev_seed: int | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Numpy core of the sample stage, shared with the packed blocked
-    loop (operators/nnd_blocked): top-of-pool S per (vertex, flag),
-    emitted forward (keyed by src) and reverse (keyed by dst) as
-    (key, nbr, is_new, fwd). Order-insensitive: the lexsort totally
-    orders the group's entries.
+    """Numpy core of the sample stage: top-of-pool S per (vertex, flag)
+    — the S closest entries by (dist, dst), as the reference's update()
+    scans each pool in ascending distance order and takes flagged
+    entries until S are seen (src/index_graph.cpp:62-77) — emitted
+    forward (keyed by src) and reverse (keyed by dst) as (key, nbr,
+    is_new, fwd). Order-insensitive: the lexsort totally orders the
+    group's entries.
 
     ``rev_seed`` (the pairgen round's reservoir seed) enables the
     EXACT sender-side reverse pre-cut — the map-side combine of the
@@ -424,6 +372,28 @@ def _sample_np(
     isn = np.concatenate([kn, rn])
     fwd = np.concatenate([np.ones(ks.size, bool), np.zeros(rs.size, bool)])
     return key, nbr, isn, fwd
+
+
+def _sampled_new(
+    src: np.ndarray,
+    dst: np.ndarray,
+    new: np.ndarray,
+    dist: np.ndarray,
+    s: int,
+) -> np.ndarray:
+    """Sorted _pack2(src, dst) keys of the entries whose new flag the
+    round clears (src/index_graph.cpp:88-111): the forward sample's new
+    entries, i.e. the top-S new entries per src by (dist, dst) — the
+    same order and cap _sample_np applies to the same round-start pool.
+    The merge holds that pool, so it derives them itself instead of
+    receiving them from the sample stage."""
+    m = np.flatnonzero(new)
+    if m.size == 0:
+        return np.empty(0, "V16")
+    o = m[np.lexsort((dst[m], dist[m], src[m]))]
+    so = src[o]
+    keep = o[_ranks(np.r_[True, so[1:] != so[:-1]]) < s]
+    return np.sort(_pack2(src[keep], dst[keep]))
 
 
 def _canonical_pairs(
@@ -511,86 +481,6 @@ def _canonical_pairs(
     return _unpack2(su)
 
 
-def _pairgen_kernel(s: int, l: int, seed: int, n_blocks: int, bc, excl_bc):
-    """Stage 2: reverse cap + local join + in-place scoring + target
-    cap."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if pdf.empty:
-            return _empty(_CAND_COLS)
-        key = pdf["key"].to_numpy(np.int64)
-        nbr = pdf["nbr"].to_numpy(np.int64)
-        new = pdf["is_new"].to_numpy(bool)
-        fwd = pdf["fwd"].to_numpy(bool)
-
-        lo, hi = _canonical_pairs(key, nbr, new, fwd, s, seed, excl_bc)
-
-        frames = []
-        if lo.size:
-            ids, X = bc.value
-            dists = l2_gathered(X, ids, lo, X, ids, hi)
-            # symmetric insert targets, pre-capped at L per target
-            t = np.concatenate([lo, hi])
-            tn = np.concatenate([hi, lo])
-            td = np.concatenate([dists, dists])
-            t, td, tn = _order_target_dist(t, td, tn)
-            ch = np.r_[True, t[1:] != t[:-1]]
-            kp = _ranks(ch) < l
-            t, tn, td = t[kp], tn[kp], td[kp]
-            frames.append((t, tn, td, np.zeros(t.size, bool)))
-
-        fm = fwd & new  # sampled-new forward entries: clear their flags
-        if fm.any():
-            frames.append(
-                (key[fm], nbr[fm], np.zeros(fm.sum()), np.ones(fm.sum(), bool))
-            )
-        if not frames:
-            return _empty(_CAND_COLS)
-        osrc = np.concatenate([f[0] for f in frames])
-        odst = np.concatenate([f[1] for f in frames])
-        odist = np.concatenate([f[2] for f in frames])
-        oclear = np.concatenate([f[3] for f in frames])
-        return pd.DataFrame(
-            {"blk": _blk_np(osrc, n_blocks), "src": osrc, "dst": odst,
-             "dist": odist, "clear": oclear}
-        )
-
-    return fn
-
-
-def _merge_kernel(l: int):
-    """Stage 3: pool ∪ candidates -> min-dedupe, top-L, flags, fresh."""
-
-    def fn(pool_pdf: pd.DataFrame, cand_pdf: pd.DataFrame) -> pd.DataFrame:
-        ps = pool_pdf["src"].to_numpy(np.int64) if len(pool_pdf) else np.empty(0, np.int64)
-        pdd = pool_pdf["dst"].to_numpy(np.int64) if len(pool_pdf) else np.empty(0, np.int64)
-        pdist = pool_pdf["dist"].to_numpy(np.float64) if len(pool_pdf) else np.empty(0)
-        pnew = pool_pdf["is_new"].to_numpy(bool) if len(pool_pdf) else np.empty(0, bool)
-
-        if len(cand_pdf):
-            cl = cand_pdf["clear"].to_numpy(bool)
-            cs = cand_pdf["src"].to_numpy(np.int64)
-            cd = cand_pdf["dst"].to_numpy(np.int64)
-            cdist = cand_pdf["dist"].to_numpy(np.float64)
-            clears = np.sort(_pack2(cs[cl], cd[cl]))
-            cs, cd, cdist = cs[~cl], cd[~cl], cdist[~cl]
-        else:
-            clears = np.empty(0, "V16")
-            cs = cd = np.empty(0, np.int64)
-            cdist = np.empty(0)
-
-        out = _merge_np(ps, pdd, pdist, pnew, cs, cd, cdist, clears, l)
-        if out is None:
-            return _empty(_MERGE_COLS)
-        s2, d2, dist2, is_new, fresh = out
-        return pd.DataFrame(
-            {"src": s2, "dst": d2, "dist": dist2,
-             "is_new": is_new, "fresh": fresh}
-        )
-
-    return fn
-
-
 def _merge_np(
     ps: np.ndarray,
     pdd: np.ndarray,
@@ -602,8 +492,7 @@ def _merge_np(
     clears: np.ndarray,
     l: int,
 ):
-    """Numpy core of the merge stage, shared with the packed blocked
-    loop: pool ∪ candidates -> min-dist dedupe, per-src top-L by
+    """Numpy core of the merge stage: pool ∪ candidates -> min-dist dedupe, per-src top-L by
     (dist, dst), flag maintenance against the sorted ``clears`` packed
     pairs, fresh-insert marking. Returns (src, dst, dist, is_new,
     fresh) with src grouped and each group (dist, dst)-ascending, or
@@ -684,110 +573,3 @@ def collect_exclusion(exclude_pairs: DataFrame, spark: SparkSession):
         _pack2(canon["a"].to_numpy(np.int64), canon["b"].to_numpy(np.int64))
     )
     return spark.sparkContext.broadcast(pk)
-
-
-def nn_descent_fused(
-    spark: SparkSession,
-    emb: DataFrame,
-    bc,
-    k: int,
-    l: int,
-    s: int,
-    max_iters: int,
-    min_update_rate: float,
-    seed: int,
-    init: DataFrame | None = None,
-    exclude_pairs: DataFrame | None = None,
-    n_blocks: int | None = None,
-    min_recall: float | None = None,
-    control_df: DataFrame | None = None,
-    control_total: int = 0,
-) -> tuple[DataFrame, list[dict]]:
-    """Fused superstep loop. ``bc`` is a knn_graph.broadcast_matrix handle
-    (required — callers take the blocked loop without one). Returns
-    (pool, metrics); the caller applies the final top-K cut.
-
-    ``min_recall`` + ``control_df``/``control_total`` (prepared by
-    nn_descent) enable the reference's sampled-recall stop criterion
-    (src/index_graph.cpp:172-179): pool membership of exact control
-    truth, a broadcast semi-join per round here. The update-rate stop
-    stays active alongside."""
-    from kgraph_framework_spark.operators.knn_graph import (
-        _score_pairs,
-        random_init,
-    )
-
-    B = n_blocks or auto_n_blocks(
-        spark.sparkContext.defaultParallelism, len(bc.value[0]), l
-    )
-    excl_bc = None
-    if exclude_pairs is not None:
-        excl_bc = collect_exclusion(exclude_pairs, spark)
-
-    pool = init if init is not None else random_init(emb, k, seed)
-    scored = _score_pairs(
-        pool.select(F.col("src").alias("a"), F.col("dst").alias("b")), emb, bc
-    )
-    pool = scored.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "dist",
-        F.lit(True).alias("is_new"),
-    )
-    pool = truncate_state(spark, pool)
-
-    metrics: list[dict] = []
-    n_edges_target = None
-    for it in range(max_iters):
-        t_round = time.monotonic()
-        pool_b = pool.select(
-            blk_col(F.col("src"), B).alias("blk"), "src", "dst", "dist",
-            "is_new",
-        )
-        samples = pool_b.groupBy("blk").applyInPandas(
-            # sample seed == this round's pairgen reservoir seed, so the
-            # sender-side reverse pre-cut ranks exactly like the
-            # receiver-side reservoir (see _sample_np)
-            _sample_kernel(s, seed + 3 * it + 2, B),
-            SAMPLE_SCHEMA,
-        )
-        cands = samples.groupBy("blk").applyInPandas(
-            _pairgen_kernel(s, l, seed + 3 * it + 2, B, bc, excl_bc),
-            CAND_SCHEMA,
-        )
-        merged = (
-            pool_b.groupBy("blk")
-            .cogroup(cands.groupBy("blk"))
-            .applyInPandas(
-                lambda kp, cp: _merge_kernel(l)(kp, cp), MERGE_SCHEMA
-            )
-        )
-        new_pool = truncate_state(spark, merged)
-        fresh = new_pool.where(F.col("fresh")).count()
-        release_state(pool)
-        reclaim_shuffles(spark, len(bc.value[0]))
-        if n_edges_target is None:
-            n_edges_target = new_pool.count()
-        rate = fresh / max(n_edges_target, 1)
-        row_m = {"superstep": it, "new_entries": int(fresh),
-                 "update_rate": rate,
-                 "wall_sec": round(time.monotonic() - t_round, 2)}
-        pool = new_pool.select("src", "dst", "dist", "is_new")
-        recall_stop = False
-        if min_recall is not None and control_df is not None:
-            # timed separately, mirroring the reference's protocol (its
-            # per-iter wall excludes eval_recall)
-            t_ev = time.monotonic()
-            hits = pool.join(
-                F.broadcast(control_df), ["src", "dst"], "left_semi"
-            ).count()
-            rec = hits / max(control_total, 1)
-            row_m["recall"] = round(rec, 4)
-            row_m["recall_eval_sec"] = round(time.monotonic() - t_ev, 2)
-            recall_stop = rec >= min_recall
-        row_m["recall_stop"] = recall_stop
-        metrics.append(row_m)
-        if recall_stop or rate < min_update_rate:
-            break
-
-    if excl_bc is not None:
-        excl_bc.unpersist()
-    return pool, metrics

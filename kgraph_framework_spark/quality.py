@@ -180,9 +180,9 @@ def nndescent_blocked_gate(
 ) -> DataFrame:
     """Beyond-broadcast lifecycle gate: the SAME descent with the corpus
     matrix sharded into cogrouped blocks (operators/nnd_blocked) instead
-    of broadcast — the 100-TB shape, forced at small N. The blocked loop
-    is bit-identical to the fused one (tests/test_nnd_blocked.py), so it
-    gates at the same floor."""
+    of broadcast — the 100-TB shape, forced at small N. Gather scoring
+    is bit-identical to broadcast scoring (tests/test_nnd_blocked.py),
+    so it gates at the same floor."""
     from kgraph_framework_spark.operators.knn_graph import (
         knn_bruteforce_l2,
         nn_descent,

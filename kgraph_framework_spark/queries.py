@@ -161,8 +161,8 @@ def q_knn_graph_minrecall(spark, sf_dir):
 
 def q_knn_graph_blocked(spark, sf_dir):
     """Beyond-broadcast descent gate: matrix sharded into cogrouped
-    blocks (the 100-TB shape), forced at small N; bit-identical to the
-    fused path so it gates at the same recall floor."""
+    blocks (the 100-TB shape), forced at small N; bit-identical to
+    broadcast scoring so it gates at the same recall floor."""
     from kgraph_framework_spark.quality import nndescent_blocked_gate
 
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")

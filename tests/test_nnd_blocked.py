@@ -1,9 +1,11 @@
-"""Blocked NN-descent (beyond-broadcast path): parity with fused path.
+"""NN-descent gather scoring (beyond-broadcast path): parity with
+broadcast scoring.
 
-The blocked loop (operators/nnd_blocked.py) must be BIT-IDENTICAL to the
-fused loop round for round — same sampling hashes, same scoring
-arithmetic, only the matrix residency differs (broadcast vs cogrouped
-shards). These tests force tiny block counts / byte caps so the sharded
+The descent loop (operators/nnd_blocked.py) must build BIT-IDENTICAL
+graphs round for round whether it scores against a broadcast matrix
+("fused") or through the cogroup gather ("blocked") — same sampling
+hashes, same scoring arithmetic, only the matrix residency differs
+(broadcast vs cogrouped shards). These tests force tiny block counts / byte caps so the sharded
 machinery is exercised on the small fixture.
 """
 
@@ -196,7 +198,7 @@ class TestAutoNBlocks:
         N*L, or one applyInPandas group holds ~N*L/cores rows."""
         # tiny pools (< FLOOR4_MIN_POOL_ROWS): plain core-count floor —
         # the 4x collision fix loses to per-group overhead there
-        # (fused_floor_ab 20k measurement)
+        # (BENCH.md "Fused-path 4x-floor A/B", 20k measurement)
         assert auto_n_blocks(32, 2_000, 30) == 32
         # at/above the measured crossover: 4x core count
         # (hash-collision floor — B keys into P partitions need B >> P

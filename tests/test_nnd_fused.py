@@ -1,5 +1,6 @@
-"""Fused NN-descent kernels: SQL/numpy lockstep + recall against the
-brute-force oracle."""
+"""NN-descent numpy cores and broadcast scoring: SQL/numpy lockstep,
+the flag-clear derivation, and recall against the brute-force
+oracle."""
 
 from __future__ import annotations
 
@@ -170,6 +171,34 @@ class TestRevPushGate:
         assert pairs[None][0].tolist() == pairs[seed][0].tolist()
         assert pairs[None][1].tolist() == pairs[seed][1].tolist()
         assert pairs[None][0].size > 0
+
+
+class TestSampledNew:
+    """The merge re-derives the round's flag clears from the round-start
+    pool; they must be exactly the sample stage's forward new rows."""
+
+    @pytest.mark.parametrize("s", [1, 3, 8])
+    def test_equals_forward_new_samples(self, s):
+        from kgraph_framework_spark.operators.nnd_fused import (
+            _pack2,
+            _sample_np,
+            _sampled_new,
+        )
+
+        rng = np.random.default_rng(s)
+        src = np.repeat(np.arange(50, dtype=np.int64) * 7, 12)
+        dst = rng.integers(0, 400, src.size).astype(np.int64)
+        # coarse distances force (src, dist) ties that dst must break
+        dist = rng.integers(0, 5, src.size).astype(np.float64)
+        new = rng.random(src.size) < 0.6
+        perm = rng.permutation(src.size)  # order-insensitive
+        src, dst, dist, new = src[perm], dst[perm], dist[perm], new[perm]
+        key, nbr, isn, fwd = _sample_np(src, dst, new, dist, s)
+        m = fwd & isn
+        want = np.sort(_pack2(key[m], nbr[m]))
+        got = _sampled_new(src, dst, new, dist, s)
+        assert got.tobytes() == want.tobytes()
+        assert _sampled_new(src, dst, np.zeros_like(new), dist, s).size == 0
 
 
 class TestL2GatheredChunks:

@@ -1,9 +1,10 @@
-"""The Pregel runner's action contract: one Spark action per superstep.
+"""The iterative loops' action contract: one Spark action per superstep.
 
 Every superstep of ``run_supersteps`` runs exactly one SQL execution, the
 ``localCheckpoint`` that materializes the new state; the row count and the
 step's convergence scalars ride that execution through
-``DataFrame.observe``. Counted from the SQL status store, which the
+``DataFrame.observe``. Every NN-descent round does the same: its entry
+and fresh counts ride the truncate of the merged pool. Counted from the SQL status store, which the
 asynchronous listener bus fills: it is read only after the bus has
 drained and two reads agree.
 """
@@ -16,6 +17,7 @@ import time
 import pytest
 
 from kgraph_framework_spark.operators.csr import pagerank_csr
+from kgraph_framework_spark.operators.knn_graph import nn_descent
 from kgraph_framework_spark.plans.components import (
     connected_components,
     connected_components_star,
@@ -90,3 +92,25 @@ def test_one_action_per_superstep(spark, monkeypatch, name):
     assert supersteps >= 1
     # one localCheckpoint per superstep, plus the initial truncate
     assert executions == supersteps + 1, runs
+
+
+@pytest.mark.parametrize("mode", ["fused", "blocked"])
+def test_one_action_per_descent_round(spark, sf_tiny, mode):
+    """Two more rounds cost exactly two more SQL executions, on both the
+    broadcast-scored ("fused") and the gather-scored ("blocked") path."""
+    emb = (
+        spark.read.parquet(f"{sf_tiny}/embeddings.parquet")
+        .select("vec_id", "embedding")
+        .persist()
+    )
+    emb.count()
+    executions = {}
+    for iters in (1, 3):
+        before = _executions(spark)
+        _, metrics = nn_descent(
+            spark, emb, k=10, max_iters=iters, min_update_rate=0, mode=mode
+        )
+        executions[iters] = _executions(spark) - before
+        assert sum("superstep" in m for m in metrics) == iters
+    emb.unpersist()
+    assert executions[3] - executions[1] == 2, executions
